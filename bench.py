@@ -33,310 +33,17 @@ from retail_etl_pipeline_airflow_s3_athena_spark import get_spark
 from retail_etl_pipeline_airflow_s3_athena_spark.functions.caching import release_cached
 from retail_etl_pipeline_airflow_s3_athena_spark.plans import analytics, gold, retail_views
 
-ANALYTICS = [
-    "daily_revenue",
-    "top_performing_customers",
-    "product_analysis",
-    "revenue_by_category",
-    "daily_revenue_running",
-    "daily_revenue_ma7",
-    "segment_sales_rollup",
-]
-
+# The timed rows partition the queries() registry: the four gold tables
+# are timed together as gold_materialize, the analytics SQL against the
+# materialized gold, and every other entry standalone, in registry order.
+GOLD_TABLES = (
+    "daily_sales_summary", "top_customers", "product_performance",
+    "store_performance",
+)
+ANALYTICS = list(analytics.ANALYTICS_SQL)
 STANDALONE = [
-    "pricing_summary",
-    "shipping_priority",
-    "local_supplier_volume",
-    "promo_revenue",
-    "text_features",
-    "dedup_exact",
-    "minhash_signatures",
-    "near_dup_pairs",
-    "cosine_topk_gemm",
-    "embedding_near_dup_gemm",
-    "windowed_event_stats",
-    "sessionize_events",
-    "asof_join_events",
-    "doc_chunks",
-    "pack_sequences",
-    "hash_sample_events",
-    "hll_distinct_users",
-    "concurrent_sessions",
-    "simhash_near_dup",
-    "quality_filter_docs",
-    # r4: previously correctness-verified but never timed (VERDICT r3 #5)
-    "late_shipment_priority",
-    "customer_value_tiles",
-    "daily_revenue_delta",
-    "ivf_topk",
-    "scd2_customers",
-    "bigram_vocab",
-    "quantize_embeddings",
-    "tfidf_top_terms",
-    "embedding_near_dup_lsh",
-    "incremental_near_dups",
-    # r5: previously correctness-verified but never timed (VERDICT r4 #4)
-    # — includes the two most expensive operators in the repo (the
-    # connected-components family), so regressions there are visible
-    "rp_lsh_signatures",
-    "near_dup_clusters",
-    "dedup_corpus",
-    "funnel_conversion",
-    "weekly_retention",
-    "snapshot_diff_customers",
-    "value_histogram",
-    "corpus_stats",
-    "cheapest_part_supplier",
-    "nation_trade_volume",
-    "part_supplier_breadth",
-    "promo_part_suppliers",
-    "brand_basket_revenue",
-    "nation_market_share",
-    # r5 additions (Q13 / Q21 / Q22 / Q11 shapes)
-    "customer_order_distribution",
-    "lone_late_supplier",
-    "above_avg_dormant_value",
-    "supplier_revenue_share",
-    # r5 additions (Q6 / Q9 / Q10 / Q12 / Q15 shapes, CUBE, MAD
-    # anomaly detection, inter-order gap windows)
-    "discount_band_revenue",
-    "nation_year_profit",
-    "returned_item_customers",
-    "linestatus_priority_mix",
-    "top_revenue_supplier",
-    "segment_year_cube",
-    "anomalous_revenue_days",
-    "customer_order_gaps",
-    "kmeans_refine",
-    "kmeans_two_round",
-    "normalize_text",
-    "curated_docs",
-    "fuzzy_part_names",
-    "dedup_rate_report",
-    "brand_corr_stats",
-    # r5: the remaining previously-untimed queries — EVERY queries()
-    # entry now has a bench row (the four gold tables are timed inside
-    # gold_materialize; the 7 ANALYTICS run against materialized gold)
-    "big_orders",
-    "blocked_jaccard_pairs",
-    "category_reach",
-    "churned_buyers",
-    "corpus_shuffle",
-    "cosine_topk",
-    "decontaminate_docs",
-    "dormant_customers",
-    "dq_summary_customer",
-    "embedding_near_dup",
-    "event_value_quantiles",
-    "extract_props",
-    "label_centroids",
-    "language_id",
-    "lsh_candidate_pairs",
-    "multimodal_pipeline",
-    "pack_bins",
-    "pii_redact_docs",
-    "repeat_buyers_intersect",
-    "repetition_signals",
-    "session_window_stats",
-    "silver_clean_events",
-    "simhash_signatures",
-    "small_quantity_revenue",
-    "source_cap_docs",
-    "stratified_sample_docs",
-    "topk_events_per_type",
-    "union_all_orders",
-    "user_event_pivot",
-    "user_event_unpivot",
-    # r5 second batch
-    "winnow_fingerprints",
-    "winnow_shared_pairs",
-    "cms_heavy_hitters",
-    "bloom_decontaminate",
-    "fuzzy_decontaminate",
-    "knn_graph",
-    "semantic_dedup",
-    "dataset_split_docs",
-    "pagerank_near_dups",
-    "encode_token_ids",
-    "containment_pairs",
-    "dup_span_stats",
-    "profile_customers",
-    "standardize_embeddings",
-    "event_transitions",
-    "build_training_set",
-    "basket_rules",
-    "dup_triangles",
-    "rolling_distinct_users",
-    "bigram_prob_score",
-    "ngram_novelty",
-    "cluster_size_histogram",
-    "embedding_outliers",
-    # r6: streaming end-states under the oracle gate (their wall-clock
-    # is dominated by stream startup + the deliberate 1.1s mtime gap in
-    # scd2_stream_replay's two-batch staging — honest fixed overhead)
-    "scd2_stream_replay",
-    "hll_stream_estimates",
-    "dedup_keep_best",
-    "source_overlap",
-    "resize_raw_images",
-    "audio_features_raw",
-    "video_frame_luma",
-    # r8: stdlib PNG decode (zlib inflate + integer defilter),
-    # perceptual image dedup, persisted fingerprint store, persisted
-    # ANN index (train-once/query-forever)
-    "png_features",
-    "image_near_dup",
-    "stored_near_dups",
-    "store_ingest_loop",
-    "store_compacted_dedup",
-    "ann_index_topk",
-    "ann_index_append_topk",
-    "bpe_encode_persisted",
-    "pq_sdc_near_dup",
-    # r7: DSIR importance weighting + mixing diagnostics
-    # (deterministic fixed-point log2)
-    "dsir_importance",
-    "dsir_select",
-    "mixing_plan",
-    "source_entropy",
-    "dsir_stream_importance",
-    # r7: BPE tokenizer induction (32-merge loop) + corpus accounting
-    "bpe_merges",
-    "bpe_doc_tokens",
-    "bpe_encode_docs",
-    # r7: product quantization (train / encode / ADC search)
-    "pq_codebooks",
-    "pq_codes",
-    "pq_topk",
-    "ivf_pq_topk",
-    # r7: exact-substring duplicate spans, the realized training mix,
-    # exact distributed percentiles
-    "dup_spans",
-    "strip_dup_spans",
-    "mixing_sample",
-    "order_value_quantiles",
-    "pq_recall",
-    "length_model_fit",
-    "length_model_outliers",
-    "zorder_layout",
-    "data_card",
-    "cms_stream_heavy_hitters",
-    "near_dup_recall",
-    "curriculum_mix",
-    "event_key_skew",
-    "length_drift_chisq",
-    "source_token_kl",
-    "snapshot_value_psi",
-    "psi_stream_drift",
-    "training_manifest",
-    "manifest_diff",
-    "salted_segment_order_stats",
-    "chisq_stream_drift",
-    "kl_stream_drift",
-    "ivf_pq_residual_topk",
-    "bucketed_segment_order_stats",
-    # r9: ANN index maintenance (compaction + measured staleness),
-    # bronze CSV round-trip under the oracle gate
-    "ann_index_compacted_topk",
-    "ann_index_staleness",
-    "bronze_roundtrip",
-    # r9: unigram-LM tokenizer (hard-EM, detmath fixed-point costs),
-    # learned quality classifier (exact-integer diagonal LDA)
-    "unigram_vocab",
-    "unigram_encode_docs",
-    "unigram_encode_persisted",
-    "quality_model_fit",
-    "quality_model_scores",
-    # r9: stdlib baseline JPEG (Huffman + integer Q14 IDCT)
-    "jpeg_features",
-    # r9: the full ANN maintenance loop (measure -> rebuild -> compact)
-    "ann_index_rebuilt_topk",
-    # r9 (cont.): incremental gold maintenance — each row times
-    # found + 2-3 ingests + serve (serve-only cost is the
-    # gold_store_daily_serve row below)
-    "gold_store_daily",
-    "gold_store_compacted",
-    "gold_store_top_customers",
-    "gold_store_products",
-    "gold_stream_daily",
-    # r10: the retention lifecycle (found + ingest + retain + ingest
-    # + serve; watermark fold invisible to served values)
-    "gold_store_retained",
-    # r10: crawl-provenance dedup through real WARC bytes
-    "url_canonical_dedup",
-    # r10: multimodal training-set assembly (curated text + decoded
-    # media token blocks, leakage-free split, first-fit pack)
-    "multimodal_training_set",
-    "multimodal_manifest",
-    # r10: the fused crawl front door (WARC -> URL dedup -> HTML
-    # extract -> curation/split/pack, one lazy plan)
-    "crawl_to_training_set",
-    # r10: JSONL shard sink/source round-trip (RFC 8259 escaping)
-    "jsonl_roundtrip",
-    # r10: incremental rebuild audit across modalities
-    "multimodal_manifest_diff",
-    # r10: tiered crawl dedup funnel report
-    "crawl_dedup_report",
-    # r11: robots.txt admission control (RFC 9309 parse + match) and
-    # the admitted crawl pipeline (admission fused before dedup)
-    "robots_rules_parsed",
-    "robots_filter_captures",
-    "crawl_admitted_training_set",
-    # r11: sitemap discovery + coverage audit
-    "sitemap_urls_parsed",
-    "crawl_coverage_report",
-    # r11: compression-ratio quality signal (zlib, codec-shape)
-    "compression_signals",
-    # r11: ANN delete lifecycle (tombstone serve + compaction fold)
-    "ann_index_deleted_topk",
-    "ann_index_delete_compacted",
-    # r9 (cont.): compressed audio (RIFF/WAV + IMA ADPCM) and
-    # compressed video (AVI + MJPEG) decode
-    "wav_features",
-    "mjpeg_frame_luma",
-    # r9 (cont.): animated GIF (LZW) decode
-    "gif_frame_luma",
-    # r9 (cont.): WARC pack + ingest round-trip (Common Crawl layout)
-    "warc_ingest_docs",
-    # r9 (cont.): compressed tar (gz/bz2/xz) pack + ingest round-trip
-    "tar_ingest_docs",
-    # r9 (cont.): unified media router census over all ten classes
-    "media_type_census",
-    # r9 (cont.): integer-Goertzel spectral band energies
-    "wav_band_energy",
-    # r9 (cont.): cross-format video near-dup (frame dHash vote)
-    "video_near_dup",
-    # r9 (cont.): audio near-dup across codecs (band fingerprint)
-    "audio_near_dup",
-    # r9 (cont.): HTML main-content extraction round-trip
-    "html_extract_docs",
-    # r12: discovery-chain widenings (sitemapindex walk, recrawl
-    # scheduling, robots-declared sitemaps + discovered coverage)
-    "sitemap_index_expanded",
-    "sitemap_recrawl_candidates",
-    "robots_declared_sitemaps",
-    "crawl_coverage_discovered",
-    # r12: wire-format closure (ZIP archives, WARC revisit
-    # resolution, WET extracted-text shards)
-    "zip_ingest_docs",
-    "warc_revisit_resolved",
-    "wet_ingest_docs",
-    # r12: CDX index tier (build, host rollup, partitioned-store
-    # pruned lookup, crawl-over-crawl delta)
-    "cdx_index_records",
-    "cdx_host_stats",
-    "cdx_store_lookup",
-    "crawl_delta_report",
-    # r12: WAT link tier (outlink extraction, host graph, frontier,
-    # weighted dangling-aware authority rank)
-    "page_outlinks",
-    "host_link_graph",
-    "crawl_frontier_hosts",
-    "host_authority_rank",
-    # r12: politeness scheduling (Crawl-delay fetch slots)
-    "polite_fetch_plan",
-    # r12: BMP decode
-    "bmp_features",
+    name for name in entrymod.queries()
+    if name not in GOLD_TABLES and name not in analytics.ANALYTICS_SQL
 ]
 
 
@@ -374,11 +81,9 @@ def main() -> None:
     for name in ANALYTICS:
         spark.sql(analytics.ANALYTICS_SQL[name]).collect()
     for name in STANDALONE:
-        fn = qs.get(name)
-        if fn is not None:
-            wdf = fn(spark, warm_dir)
-            wdf.collect()
-            release_cached(wdf)
+        wdf = qs[name](spark, warm_dir)
+        wdf.collect()
+        release_cached(wdf)
     # drop warmup caches (operators persist intermediates) so the timed
     # phase starts with empty storage memory
     spark.catalog.clearCache()
@@ -438,11 +143,8 @@ def main() -> None:
     spark.catalog.clearCache()
     for _ in range(ITERS):
         for name in STANDALONE:
-            fn = qs.get(name)
-            if fn is None:
-                continue
             t0 = time.time()
-            df = fn(spark, sf_dir)
+            df = qs[name](spark, sf_dir)
             df.collect()
             record(name, time.time() - t0)
             # release operator-owned caches (the documented ownership

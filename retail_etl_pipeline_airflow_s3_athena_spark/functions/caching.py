@@ -159,3 +159,27 @@ def release_cached(result: DataFrame, blocking: bool = False) -> None:
         dep.unpersist(blocking)
     if hasattr(result, _ATTR):
         setattr(result, _ATTR, ())
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the block-manager storage behind a ``localCheckpoint``'d
+    DataFrame.  ``DataFrame.unpersist`` only talks to the SQL cache
+    manager and no-ops on checkpoints; the blocks belong to the
+    internal RDD held by the plan's single LogicalRDD node.  Best
+    effort: on any interop failure the ContextCleaner reclaims the
+    blocks when the RDD is garbage-collected."""
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception:
+        pass
+
+
+class _CheckpointDep:
+    """Adapter giving a checkpointed frame the ``unpersist(blocking)``
+    shape :func:`release_cached` expects of a dep."""
+
+    def __init__(self, df: DataFrame):
+        self._df = df
+
+    def unpersist(self, blocking: bool = False) -> None:
+        release_checkpoint(self._df)

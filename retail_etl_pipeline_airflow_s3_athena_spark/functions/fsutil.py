@@ -1,6 +1,7 @@
-"""Hadoop-FS helpers shared by the persisted-store tiers (gold store,
-ANN index): FS handles and the crash-recoverable directory swap.
-FS-API-only — the same calls work on local FS, HDFS, and s3a."""
+"""Hadoop-FS helpers: the one FS handle every module uses, and the
+crash-recoverable directory swap the persisted stores (gold store, ANN
+index) share.  FS-API-only — the same calls work on local FS, HDFS,
+and s3a."""
 
 from __future__ import annotations
 

@@ -174,19 +174,9 @@ def price_qty_e2(price: Column | str, qty: Column | str) -> Column:
     return cents(price) * q.cast("long")
 
 
-def sql_price_qty_e2(price: str, qty: str) -> str:
-    """SQL twin of :func:`price_qty_e2`."""
-    return f"({sql_cents(price)} * CAST({qty} AS BIGINT))"
-
-
 def price_qty_sum(price: Column | str, qty: Column | str) -> Column:
     """Order-independent SUM(price * quantity) via exact cents."""
     return exact_sum(price_qty_e2(price, qty)) / 1e2
-
-
-def sql_price_qty_sum(price: str, qty: str) -> str:
-    """SQL twin of :func:`price_qty_sum`."""
-    return f"({sql_exact_sum(sql_price_qty_e2(price, qty))} / 1e2)"
 
 
 def int_avg(col: Column | str) -> Column:

@@ -47,6 +47,7 @@ from retail_etl_pipeline_airflow_s3_athena_spark.functions.caching import (
     local_relation,
     materialize_model,
 )
+from retail_etl_pipeline_airflow_s3_athena_spark.functions.fsutil import hadoop_fs, swap_dir
 from retail_etl_pipeline_airflow_s3_athena_spark.functions.jobs import (
     observed_count,
     run_jobs,
@@ -222,21 +223,6 @@ def write_ann_index(
     }
 
 
-def _labelled_count(
-    spark: SparkSession, table: str, schema: str, path: str
-) -> DataFrame:
-    """(t, n) single-row count of one persisted index table, labelled
-    so several can union into ONE receipt job.  groupBy over a literal
-    yields no row for an empty table — callers default missing keys
-    to 0."""
-    return (
-        spark.read.schema(schema)
-        .parquet(f"{path}/{table}")
-        .groupBy(F.lit(table).alias("t"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 def _read_coarse(spark: SparkSession, path: str, dim: int) -> DataFrame:
     """(label, cv, cnrm) reassembled from the persisted centroids."""
     return _reassemble_vec(
@@ -322,10 +308,6 @@ def _tombstone_files(spark: SparkSession, path: str) -> list[str]:
     clears exactly this snapshot: ids appended by a concurrent
     ``delete_from_ann_index`` AFTER the snapshot survive to the next
     compaction instead of being silently discarded (ADVICE r11)."""
-    from retail_etl_pipeline_airflow_s3_athena_spark.functions.fsutil import (
-        hadoop_fs,
-    )
-
     jvm, fs = hadoop_fs(spark, path)
     pattern = jvm.org.apache.hadoop.fs.Path(f"{path}/tombstones/*.parquet")
     statuses = fs.globStatus(pattern)
@@ -479,10 +461,8 @@ def _codes_data_files(spark: SparkSession, path: str) -> int:
     """Number of parquet DATA files under the cell-partitioned codes
     table (driver-side FS listing — bounded by file count, the thing
     compaction exists to keep small)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
+    jvm, fs = hadoop_fs(spark, path)
     pattern = jvm.org.apache.hadoop.fs.Path(f"{path}/codes/*/*.parquet")
-    fs = pattern.getFileSystem(conf)
     statuses = fs.globStatus(pattern)
     return 0 if statuses is None else len(statuses)
 
@@ -509,11 +489,6 @@ def compact_ann_index(spark: SparkSession, path: str) -> dict:
     next compaction folds them (ADVICE r11; no single-writer
     assumption needed between deleters and the compactor).  Returns
     {files_before, files_after, codes, deletes_folded}."""
-    from retail_etl_pipeline_airflow_s3_athena_spark.functions.fsutil import (
-        hadoop_fs,
-        swap_dir,
-    )
-
     from pyspark.sql import Observation
 
     files_before = _codes_data_files(spark, path)

@@ -61,8 +61,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from retail_etl_pipeline_airflow_s3_athena_spark.functions.caching import (
+    _CheckpointDep,
     attach_cached_deps,
     local_relation,
+    release_checkpoint,
 )
 from retail_etl_pipeline_airflow_s3_athena_spark.functions.jobs import (
     observed_count,
@@ -70,29 +72,6 @@ from retail_etl_pipeline_airflow_s3_athena_spark.functions.jobs import (
 )
 from retail_etl_pipeline_airflow_s3_athena_spark.operators.text import _sql_tokens, tokens
 
-
-def release_checkpoint(df: DataFrame) -> None:
-    """Free the block-manager storage behind a ``localCheckpoint``'d
-    DataFrame.  ``DataFrame.unpersist`` only talks to the SQL cache
-    manager and no-ops on checkpoints; the blocks belong to the
-    internal RDD held by the plan's single LogicalRDD node.  Best
-    effort: on any interop failure the ContextCleaner reclaims the
-    blocks when the RDD is garbage-collected."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
-class _CheckpointDep:
-    """Adapter giving a checkpointed frame the ``unpersist(blocking)``
-    shape ``functions.caching.release_cached`` expects of a dep."""
-
-    def __init__(self, df: DataFrame):
-        self._df = df
-
-    def unpersist(self, blocking: bool = False) -> None:
-        release_checkpoint(self._df)
 
 EOW = "</w>"
 N_MERGES = 32

@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from retail_etl_pipeline_airflow_s3_athena_spark.functions.caching import (
     attach_cached_deps,
 )
+from retail_etl_pipeline_airflow_s3_athena_spark.functions.fsutil import hadoop_fs
 from retail_etl_pipeline_airflow_s3_athena_spark.functions.jobs import (
     observed_count,
     run_jobs,
@@ -98,11 +99,9 @@ def _write_bucketed(
 
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{warehouse}/{name}")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(jpath, True)
+    loc = f"{spark.conf.get('spark.sql.warehouse.dir')}/{name}"
+    jvm, fs = hadoop_fs(spark, loc)
+    fs.delete(jvm.org.apache.hadoop.fs.Path(loc), True)
     obs = Observation(f"write_{name}")
     df = df.observe(obs, F.count(F.lit(1)).alias("n"))
     if keys:

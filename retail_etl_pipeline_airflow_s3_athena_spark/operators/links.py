@@ -56,8 +56,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.caching import attach_cached_deps
-from .bpe import _CheckpointDep
+from ..functions.caching import _CheckpointDep, attach_cached_deps
 from .url import sql_url_host, url_host
 
 LINKS_SCHEMA = T.StructType(

@@ -59,8 +59,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from retail_etl_pipeline_airflow_s3_athena_spark.functions.caching import (
+    _CheckpointDep,
     attach_cached_deps,
     local_relation,
+    release_checkpoint,
 )
 from retail_etl_pipeline_airflow_s3_athena_spark.functions.jobs import (
     observed_count,
@@ -71,14 +73,7 @@ from retail_etl_pipeline_airflow_s3_athena_spark.functions.detmath import (
     log2_e20,
     log2_table_df,
 )
-from retail_etl_pipeline_airflow_s3_athena_spark.operators.bpe import (
-    ORACLE_SF_DIR_ENV,
-    DEFAULT_ORACLE_SF_DIR,
-    _CheckpointDep,
-    _oracle_texts,
-    _q,
-    release_checkpoint,
-)
+from retail_etl_pipeline_airflow_s3_athena_spark.operators.bpe import _oracle_texts, _q
 from retail_etl_pipeline_airflow_s3_athena_spark.operators.text import (
     _sql_tokens,
     tokens,

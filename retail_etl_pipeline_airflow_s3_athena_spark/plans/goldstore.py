@@ -62,6 +62,7 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from retail_etl_pipeline_airflow_s3_athena_spark.functions.fsutil import hadoop_fs, swap_dir
 from retail_etl_pipeline_airflow_s3_athena_spark.functions.money import cents
 
 COMPACTED = "__compacted__"
@@ -219,11 +220,11 @@ def compact_gold_partials(
     monoid argument (a SUM of SUMs), so served tables are bit-identical
     before/after — asserted in tests and by the gate oracle.
     Crash-recoverable swap via write-to-temp + aside-rename
-    (_swap_store)."""
+    (functions/fsutil.swap_dir)."""
     merged = _merged(spark, path, key, partial_cols)
     tmp = f"{path}__compacting"
     merged.write.mode("overwrite").parquet(f"{tmp}/batch={COMPACTED}")
-    _swap_store(spark, path, tmp, "compact_gold_partials")
+    swap_dir(spark, path, tmp, "compact_gold_partials")
     return {
         "batches_after": spark.read.parquet(path)
         .select("batch")
@@ -234,10 +235,6 @@ def compact_gold_partials(
 
 def compact_gold_daily(spark: SparkSession, path: str) -> dict:
     return compact_gold_partials(spark, path, "sale_date", _DAILY_PARTIALS)
-
-
-def compact_gold_spend(spark: SparkSession, path: str) -> dict:
-    return compact_gold_partials(spark, path, "customer_id", _SPEND_PARTIALS)
 
 
 # ---------------------------------------------------------------------------
@@ -304,29 +301,13 @@ def serve_gold_product_performance(
 _WATERMARK_SUFFIX = "__watermark"
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, p.getFileSystem(conf)
-
-
-def _swap_store(spark: SparkSession, path: str, tmp: str, op: str) -> None:
-    """Crash-recoverable store swap — shared with the ANN index via
-    functions/fsutil.swap_dir (aside-rename sequence: every crash
-    point leaves a recoverable copy)."""
-    from retail_etl_pipeline_airflow_s3_athena_spark.functions.fsutil import swap_dir
-
-    swap_dir(spark, path, tmp, op)
-
-
 def read_gold_watermark(spark: SparkSession, path: str) -> str | None:
     """The store's retention watermark (ISO date string) or None.
 
     Encoded as the NAME of a marker file under ``<path>__watermark/``
     (max name wins) — name-only storage needs no byte I/O through the
     Hadoop FS API and works identically on local FS, HDFS, and s3a."""
-    jvm, fs = _hadoop_fs(spark, path)
+    jvm, fs = hadoop_fs(spark, path)
     wm_dir = jvm.org.apache.hadoop.fs.Path(path + _WATERMARK_SUFFIX)
     if not fs.exists(wm_dir):
         return None
@@ -335,7 +316,7 @@ def read_gold_watermark(spark: SparkSession, path: str) -> str | None:
 
 
 def _write_gold_watermark(spark: SparkSession, path: str, cutoff: str) -> None:
-    jvm, fs = _hadoop_fs(spark, path)
+    jvm, fs = hadoop_fs(spark, path)
     wm_dir = path + _WATERMARK_SUFFIX
     fs.mkdirs(jvm.org.apache.hadoop.fs.Path(wm_dir))
     fs.create(
@@ -398,7 +379,7 @@ def retain_gold_daily(
     tmp = f"{path}__retaining"
     new_store.write.mode("overwrite").partitionBy("batch").parquet(tmp)
     n_folded = folded.count()
-    _swap_store(spark, path, tmp, "retain_gold_daily")
+    swap_dir(spark, path, tmp, "retain_gold_daily")
     _write_gold_watermark(spark, path, cutoff.isoformat())
     return {
         "cutoff": cutoff.isoformat(),

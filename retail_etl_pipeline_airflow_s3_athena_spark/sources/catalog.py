@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from retail_etl_pipeline_airflow_s3_athena_spark.functions.fsutil import hadoop_fs
+
 
 def create_database(spark: SparkSession, name: str) -> None:
     """Create-if-not-exists (reference glue_registry.py:21-38, S11)."""
@@ -73,10 +75,8 @@ def write_bucketed_table(
     # behind (DROP only removes metadata it knows about) — clear it
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
     loc = f"{warehouse}/{database + '.db/' if database else ''}{table}"
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(loc)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(jpath, True)
+    jvm, fs = hadoop_fs(spark, loc)
+    fs.delete(jvm.org.apache.hadoop.fs.Path(loc), True)
     (
         df.write.bucketBy(buckets, key)
         .sortBy(key)
@@ -84,12 +84,6 @@ def write_bucketed_table(
         .format("parquet")
         .saveAsTable(name)
     )
-
-
-def register_temp_view(df: DataFrame, name: str) -> None:
-    """Session-scoped registration — the in-process fast path used by
-    tests and the analytics layer."""
-    df.createOrReplaceTempView(name)
 
 
 def bucketed_segment_order_stats(

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from retail_etl_pipeline_airflow_s3_athena_spark.functions.fsutil import hadoop_fs
+
 # Pinned source schema for the events stream.  The fixture stores ts as
 # parquet TIMESTAMP (micros); pinning TIMESTAMP_NTZ mirrors the batch
 # reader exactly (sources/readers.read_events guards on the actual
@@ -215,16 +217,6 @@ def stateful_sessions(
     )
 
 
-def _hadoop_fs(df_or_spark, uri: str):
-    """(jvm Path class, FileSystem) for ``uri`` via Spark's Hadoop
-    conf — works for any configured scheme (file://, hdfs://, s3a://)."""
-    spark = getattr(df_or_spark, "sparkSession", df_or_spark)
-    sc = spark.sparkContext
-    jpath = sc._jvm.org.apache.hadoop.fs.Path
-    fs = jpath(uri).getFileSystem(sc._jsc.hadoopConfiguration())
-    return jpath, fs
-
-
 def _versioned_overwrite_uri(
     df: DataFrame, target_dir: str, batch_id: int
 ) -> None:
@@ -243,7 +235,8 @@ def _versioned_overwrite_uri(
     branch: current + immediately-previous versions are kept, older
     ones purged.  (The boto3 twin for driver-side layer promotion is
     ``sources/object_store.py::publish_layer``.)"""
-    jpath, fs = _hadoop_fs(df, target_dir)
+    jvm, fs = hadoop_fs(df.sparkSession, target_dir)
+    jpath = jvm.org.apache.hadoop.fs.Path
     vdir, retry = f"{target_dir}.v{batch_id}", 0
     while fs.exists(jpath(vdir)):
         retry += 1
@@ -294,7 +287,8 @@ def resolve_table_dir(spark: SparkSession, target_dir: str) -> str:
     published."""
     if "://" not in target_dir:
         return target_dir
-    jpath, fs = _hadoop_fs(spark, target_dir)
+    jvm, fs = hadoop_fs(spark, target_dir)
+    jpath = jvm.org.apache.hadoop.fs.Path
     return _read_pointer(fs, jpath, target_dir) or target_dir
 
 

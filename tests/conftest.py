@@ -7,6 +7,7 @@ import pytest
 sys.path.insert(0, "/root/repo")
 
 from retail_etl_pipeline_airflow_s3_athena_spark import get_spark  # noqa: E402
+from retail_etl_pipeline_airflow_s3_athena_spark.plans import analytics  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_MED = "/root/testdata/sf0.01"
@@ -30,15 +31,11 @@ def sf_dir():
     return SF_DIR
 
 
-# The 7 analytics entries register shared temp views and keep
+# The analytics entries register shared temp views and keep
 # module-global gold cache state (plans/analytics._GOLD_STATE) — NOT
 # safe to run concurrently with each other or themselves.  Every other
 # queries() entry uses per-call tempdirs / per-query table names.
-ANALYTICS_VIEW_QUERIES = {
-    "daily_revenue", "daily_revenue_running", "daily_revenue_ma7",
-    "segment_sales_rollup", "top_performing_customers",
-    "product_analysis", "revenue_by_category",
-}
+ANALYTICS_VIEW_QUERIES = set(analytics.ANALYTICS_SQL)
 
 
 def run_query_sweep(items, worker, max_workers: int = 4):

@@ -12,7 +12,10 @@ from __future__ import annotations
 import pytest
 
 from retail_etl_pipeline_airflow_s3_athena_spark.operators import bpe
-from retail_etl_pipeline_airflow_s3_athena_spark.functions.caching import release_cached
+from retail_etl_pipeline_airflow_s3_athena_spark.functions.caching import (
+    release_cached,
+    release_checkpoint,
+)
 
 
 def _docs(spark, texts):
@@ -32,7 +35,7 @@ def test_learn_bpe_matches_python_twin(spark):
     ]
     merges, words = bpe.learn_bpe(_docs(spark, texts), n_merges=10)
     expected, _ = bpe.py_learn_bpe(texts, n_merges=10)
-    bpe.release_checkpoint(words)
+    release_checkpoint(words)
     assert merges == expected
     assert len(merges) > 3  # the corpus actually sustains a cascade
 
@@ -46,7 +49,7 @@ def test_merge_fold_greedy_left_to_right(spark):
         _docs(spark, texts), n_merges=1, min_pair_freq=1
     )
     rows = words.collect()
-    bpe.release_checkpoint(words)
+    release_checkpoint(words)
     assert merges[0][:2] == ("a", "a")
     assert merges[0][2] == 6  # 3 overlapping pairs x freq 2
     assert rows[0]["syms"] == ["aa", "aa", bpe.EOW]
@@ -89,7 +92,7 @@ def test_min_pair_freq_stops_early(spark):
     # Every word unique, every char pair hapax -> zero merges at the
     # default min_pair_freq=2.
     merges, words = bpe.learn_bpe(_docs(spark, ["ab cd ef"]), n_merges=8)
-    bpe.release_checkpoint(words)
+    release_checkpoint(words)
     assert merges == []
 
 
@@ -194,10 +197,10 @@ def test_distributed_loop_matches_driver_dispatch(spark, monkeypatch):
     ]
     merges_drv, words_drv = bpe.learn_bpe(_docs(spark, texts), n_merges=8)
     seg_drv = {r["tok"]: r["syms"] for r in words_drv.collect()}
-    bpe.release_checkpoint(words_drv)
+    release_checkpoint(words_drv)
     monkeypatch.setattr(bpe, "DRIVER_BPE_MAX_WORDS", 0)
     merges_dist, words_dist = bpe.learn_bpe(_docs(spark, texts), n_merges=8)
     seg_dist = {r["tok"]: r["syms"] for r in words_dist.collect()}
-    bpe.release_checkpoint(words_dist)
+    release_checkpoint(words_dist)
     assert merges_dist == merges_drv
     assert seg_dist == seg_drv

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from retail_etl_pipeline_airflow_s3_athena_spark.functions.caching import (
     release_cached,
+    release_checkpoint,
 )
 from retail_etl_pipeline_airflow_s3_athena_spark.functions.detmath import (
     log2_e20,
@@ -191,15 +192,15 @@ def test_distributed_loop_matches_driver_dispatch(spark, monkeypatch):
         r["piece"]: (r["freq"], r["cost_e20"]) for r in vocab_drv.collect()
     }
     s_drv = {r["tok"]: r["pieces"] for r in words_drv.collect()}
-    unigram.release_checkpoint(vocab_drv)
-    unigram.release_checkpoint(words_drv)
+    release_checkpoint(vocab_drv)
+    release_checkpoint(words_drv)
     monkeypatch.setattr(unigram, "DRIVER_UNIGRAM_MAX_WORDS", 0)
     vocab_dist, words_dist = unigram.learn_unigram(docs)
     v_dist = {
         r["piece"]: (r["freq"], r["cost_e20"]) for r in vocab_dist.collect()
     }
     s_dist = {r["tok"]: r["pieces"] for r in words_dist.collect()}
-    unigram.release_checkpoint(vocab_dist)
-    unigram.release_checkpoint(words_dist)
+    release_checkpoint(vocab_dist)
+    release_checkpoint(words_dist)
     assert v_dist == v_drv
     assert s_dist == s_drv

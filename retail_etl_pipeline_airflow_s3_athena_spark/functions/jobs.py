@@ -18,19 +18,26 @@ from __future__ import annotations
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
+from py4j.protocol import Py4JJavaError
+
 
 def observed_count(obs, key: str = "n") -> int:
-    """The observed row count of a finished action, tolerating the
-    ZERO-TASK case: a job over an empty 0-partition source (e.g. a
-    ``limit(0)`` parquet staging table) runs no tasks, so its
-    observation never fires and the JVM-side metrics row is invalid —
-    which can only mean no row passed the observed node.  Any real
-    failure of the action raised from the action call itself, before
-    this accessor runs."""
+    """The observed row count of a finished action.  A job over an
+    empty 0-partition source (e.g. a repartitioned ``limit(0)`` parquet
+    staging table) runs no task, so Spark completes its observation with
+    an EMPTY metrics row, which PySpark fails to convert; that row can
+    only mean no row passed the observed node, so it reads as 0.
+    Everything else raises: a key the observation does not define, an
+    observation never attached to a plan, a failure converting a
+    non-empty row.  (``Observation.get`` blocks until the observed
+    plan's first action ends, so call this after the action.)"""
     try:
-        return int(obs.get[key])
-    except Exception:  # noqa: BLE001 — invalid row == task-less job
-        return 0
+        metrics = obs.get
+    except Py4JJavaError:
+        if obs._jo.getRow().length() == 0:
+            return 0
+        raise
+    return int(metrics[key])
 
 
 def run_jobs(*thunks: Callable[[], object]) -> list[object]:

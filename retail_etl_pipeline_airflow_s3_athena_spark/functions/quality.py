@@ -8,51 +8,104 @@ top-k cardinality cap — Q8/Q9), rolled up into a pass/warn dict per
 table (Q10, data_quality.py:122-155).
 
 Implementation notes:
-- ``table_report`` computes rows + per-column null counts in ONE
-  aggregate pass (single job); the duplicate check is a second pass
-  (groupBy-all-columns count — the distributed version of pandas
-  ``df.duplicated().any()``, data_quality.py:22).
+- Every counting check is read off ONE per-row shape, built by
+  ``_rollup_rows``: ``rows`` (the row's weight), ``nulls`` (null cells,
+  times the weight), ``dups`` (weight - 1) and ``negs`` (1 when any
+  checked ``non_negative`` column is < 0).  A plain table weighs 1 per
+  row; a table checked for duplicates is first grouped by all of its
+  columns, so each distinct row weighs its multiplicity — ``groupBy``
+  uses the same NULL/NaN equality as ``dropDuplicates``, so the summed
+  ``dups`` is exactly ``count() - dropDuplicates().count()``.
+- ``run_data_quality_checks`` tags each table's rows, unions them and
+  runs one ``groupBy(tag)`` sum: ONE Spark action for the whole rollup,
+  silver and gold together.  The checks are small and driver-bound, so
+  the action count, not the data, sets their cost.  A table with no
+  rows yields no group and reads back as all zeros.
+- The single-check helpers run the same rollup over one table (one
+  action each), so each check has one implementation.
 - Everything returns plain Python values; callers assemble the report.
-  These are actions (they execute the plan) — the pipeline calls them
-  once per layer like the reference's DAG task.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import or_
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# The per-row shape every counting check is read from.
+_SHAPE = ("rows", "nulls", "dups", "negs")
+_WEIGHT = "__quality_weight"
+
+
+def _rollup_rows(
+    df: DataFrame, non_negative: list[str] | tuple = (), weighted: bool = False
+) -> DataFrame:
+    """``df`` as rows of ``_SHAPE``.  ``non_negative`` columns
+    missing from ``df`` are not checked; neither NULL nor NaN is
+    negative (Spark orders NaN above every number).  With
+    ``weighted``, one row per distinct full row, weighted by its count
+    (this adds a shuffle, and is what makes ``dups`` meaningful)."""
+    columns = df.columns
+    if weighted:
+        df = df.groupBy(*columns).agg(F.count(F.lit(1)).alias(_WEIGHT))
+        weight = F.col(_WEIGHT)
+    else:
+        weight = F.lit(1).cast("long")
+    row_nulls = sum(
+        (F.col(c).isNull().cast("long") for c in columns), F.lit(0).cast("long")
+    )
+    checked = [F.col(c) < 0 for c in non_negative if c in columns]
+    negs = F.when(reduce(or_, checked), 1).otherwise(0) if checked else F.lit(0)
+    return df.select(
+        weight.alias("rows"),
+        (weight * row_nulls).alias("nulls"),
+        (weight - 1).alias("dups"),
+        negs.cast("long").alias("negs"),
+    )
+
+
+def _rollup(tables: dict[str, DataFrame]) -> dict[str, tuple[int, int, int, int]]:
+    """Sum ``_SHAPE`` per tag over ``_rollup_rows`` outputs, in ONE
+    action; a tag whose table had no rows gets all zeros."""
+    if not tables:
+        return {}
+    tagged = reduce(
+        DataFrame.unionAll,
+        [
+            rows.select(F.lit(tag).alias("tag"), *_SHAPE)
+            for tag, rows in tables.items()
+        ],
+    )
+    sums = tagged.groupBy("tag").agg(*[F.sum(c).alias(c) for c in _SHAPE])
+    got = {r["tag"]: tuple(int(r[c]) for c in _SHAPE) for r in sums.collect()}
+    return {tag: got.get(tag, (0, 0, 0, 0)) for tag in tables}
+
+
+def _rollup_one(rows: DataFrame) -> tuple[int, int, int, int]:
+    return _rollup({"t": rows})["t"]
+
 
 def table_report(df: DataFrame) -> dict[str, Any]:
-    """Q1+Q3: row count, column count, total null cells — one pass."""
-    aggs = [F.count(F.lit(1)).alias("__rows")] + [
-        F.sum(F.col(c).isNull().cast("long")).alias(f"__nulls_{i}")
-        for i, c in enumerate(df.columns)
-    ]
-    row = df.agg(*aggs).first()
-    nulls = sum(row[i + 1] or 0 for i in range(len(df.columns)))
-    return {
-        "row_count": row[0],
-        "column_count": len(df.columns),
-        "null_cells": int(nulls),
-    }
+    """Q1+Q3: row count, column count, total null cells — one action."""
+    rows, nulls, _, _ = _rollup_one(_rollup_rows(df))
+    return {"row_count": rows, "column_count": len(df.columns), "null_cells": nulls}
 
 
 def duplicate_row_count(df: DataFrame) -> int:
     """Q2: number of surplus full-row duplicates (reference
     data_quality.py:22,58 ``df.duplicated().any()``, as a count)."""
-    return df.count() - df.dropDuplicates().count()
+    return _rollup_one(_rollup_rows(df, weighted=True))[2]
 
 
 def key_is_unique(df: DataFrame, key: str) -> bool:
-    """Q4: key uniqueness (reference data_quality.py:29)."""
-    row = df.agg(
-        F.count(key).alias("n"), F.countDistinct(key).alias("d")
-    ).first()
-    return row["n"] == row["d"] and df.filter(F.col(key).isNull()).count() == 0
+    """Q4: key uniqueness (reference data_quality.py:29): no NULL key
+    and no key value twice."""
+    _, nulls, dups, _ = _rollup_one(_rollup_rows(df.select(key), weighted=True))
+    return nulls == 0 and dups == 0
 
 
 def column_not_null(df: DataFrame, column: str) -> bool:
@@ -80,14 +133,13 @@ def column_non_negative(df: DataFrame, column: str) -> bool:
     """Q8: business rule — metric >= 0 (reference data_quality.py:99-111)."""
     if column not in df.columns:
         return True
-    m = df.agg(F.min(column)).first()[0]
-    return m is None or m >= 0
+    return _rollup_one(_rollup_rows(df, non_negative=[column]))[3] == 0
 
 
 def cardinality_at_most(df: DataFrame, limit: int) -> bool:
     """Q9: cardinality cap, e.g. top_customers <= 10 rows
     (reference data_quality.py:107)."""
-    return df.limit(limit + 1).count() <= limit
+    return _rollup_one(_rollup_rows(df.limit(limit + 1)))[0] <= limit
 
 
 # Gold business rules mirrored from reference data_quality.py:99-111.
@@ -104,27 +156,38 @@ def run_data_quality_checks(
     silver_tables: dict[str, DataFrame] | None = None,
 ) -> dict[str, Any]:
     """Q10: the pass/warn rollup per table (reference
-    run_data_quality_checks, data_quality.py:122-155)."""
-    report: dict[str, Any] = {"tables": {}, "all_passed": True}
-    for name, df in (silver_tables or {}).items():
-        rep = table_report(df)
-        rep["duplicate_rows"] = duplicate_row_count(df)
-        rep["date_partitioned"] = is_date_partitioned(df)
-        rep["passed"] = rep["row_count"] > 0
-        report["tables"][f"silver.{name}"] = rep
-        report["all_passed"] &= rep["passed"]
+    run_data_quality_checks, data_quality.py:122-155), in one action."""
+    silver_tables = silver_tables or {}
+    rows = {
+        f"silver.{name}": _rollup_rows(df, weighted=True)
+        for name, df in silver_tables.items()
+    }
     for name, df in gold_tables.items():
-        rep = table_report(df)
-        rules = GOLD_RULES.get(name, {})
-        checks = [rep["row_count"] > 0]
-        for col in rules.get("non_negative", []):
-            checks.append(column_non_negative(df, col))
-        if "max_rows" in rules:
-            checks.append(cardinality_at_most(df, rules["max_rows"]))
-        rep["passed"] = all(checks)
-        report["tables"][f"gold.{name}"] = rep
-        report["all_passed"] &= rep["passed"]
-    report["all_passed"] = bool(report["all_passed"])
+        non_negative = GOLD_RULES.get(name, {}).get("non_negative", [])
+        rows[f"gold.{name}"] = _rollup_rows(df, non_negative)
+    sums = _rollup(rows)
+
+    report: dict[str, Any] = {"tables": {}, "all_passed": True}
+    for name, df in silver_tables.items():
+        n, nulls, dups, _ = sums[f"silver.{name}"]
+        report["tables"][f"silver.{name}"] = {
+            "row_count": n,
+            "column_count": len(df.columns),
+            "null_cells": nulls,
+            "duplicate_rows": dups,
+            "date_partitioned": is_date_partitioned(df),
+            "passed": n > 0,
+        }
+    for name, df in gold_tables.items():
+        n, nulls, _, negs = sums[f"gold.{name}"]
+        max_rows = GOLD_RULES.get(name, {}).get("max_rows", n)
+        report["tables"][f"gold.{name}"] = {
+            "row_count": n,
+            "column_count": len(df.columns),
+            "null_cells": nulls,
+            "passed": n > 0 and negs == 0 and n <= max_rows,
+        }
+    report["all_passed"] = all(t["passed"] for t in report["tables"].values())
     return report
 
 

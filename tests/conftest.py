@@ -13,6 +13,14 @@ SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_MED = "/root/testdata/sf0.01"
 
 
+def pytest_configure(config):
+    # Every run prints its 25 slowest tests unless the caller chose a
+    # --durations of their own: the suite runs close to its time
+    # window, and the table shows where that time goes.
+    if config.option.durations is None:
+        config.option.durations = 25
+
+
 @pytest.fixture(scope="session")
 def spark():
     # local[8], not the bench's local[32]: the suite runs KB-scale

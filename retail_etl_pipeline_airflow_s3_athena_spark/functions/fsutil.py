@@ -1,11 +1,16 @@
-"""Hadoop-FS helpers: the one FS handle every module uses, and the
-crash-recoverable directory swap the persisted stores (gold store, ANN
-index) share.  FS-API-only — the same calls work on local FS, HDFS,
-and s3a."""
+"""Hadoop-FS helpers: the one FS handle every module uses, the table
+schema manifest, and the crash-recoverable directory swap the persisted
+stores (gold store, ANN index) share.  FS-API-only — the same calls
+work on local FS, HDFS, and s3a."""
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import SparkSession
+from pyspark.sql import types as T
+
+SCHEMA_MANIFEST = "_schema.json"
 
 
 def hadoop_fs(spark: SparkSession, path: str):
@@ -13,6 +18,71 @@ def hadoop_fs(spark: SparkSession, path: str):
     conf = spark._jsc.hadoopConfiguration()
     p = jvm.org.apache.hadoop.fs.Path(path)
     return jvm, p.getFileSystem(conf)
+
+
+def _nullable(node):
+    if isinstance(node, list):
+        return [_nullable(n) for n in node]
+    if not isinstance(node, dict):
+        return node
+    return {
+        k: True if k in ("nullable", "containsNull", "valueContainsNull")
+        else v if k == "metadata" else _nullable(v)
+        for k, v in node.items()
+    }
+
+
+def as_read_schema(schema: T.StructType) -> T.StructType:
+    """``schema`` as a parquet read reports it: every field, element
+    and map value nullable, whatever nullability the writer had."""
+    return T.StructType.fromJson(_nullable(schema.jsonValue()))
+
+
+def write_schema_manifest(
+    spark: SparkSession, table_dir: str, schema: T.StructType | None
+) -> None:
+    """Record the data schema (partition columns excluded) of the
+    parquet files under ``table_dir`` in ``<table_dir>/_schema.json``,
+    so reads and catalog registrations skip the footer-reading
+    inference job.  ``None`` removes the manifest: the files' schema is
+    no longer known to be uniform.  Spark's file listing skips names
+    starting with ``_``, so readers of the data never see it.
+
+    Write it only after the data commit, and remove it before a data
+    write that may leave files of another schema.  The manifest is
+    written to a temporary name and renamed into place, so a reader
+    sees the whole manifest or none."""
+    jvm, fs = hadoop_fs(spark, table_dir)
+    path = jvm.org.apache.hadoop.fs.Path(f"{table_dir}/{SCHEMA_MANIFEST}")
+    if schema is None:
+        fs.delete(path, False)
+        return
+    tmp = jvm.org.apache.hadoop.fs.Path(f"{table_dir}/{SCHEMA_MANIFEST}.tmp")
+    out = fs.create(tmp, True)
+    try:
+        out.write(as_read_schema(schema).json().encode())
+    finally:
+        out.close()
+    fs.delete(path, False)
+    if not fs.rename(tmp, path):
+        raise IOError(f"write_schema_manifest: rename into {path} failed")
+
+
+def read_schema_manifest(
+    spark: SparkSession, table_dir: str
+) -> T.StructType | None:
+    """The data schema recorded by ``write_schema_manifest``, or None
+    when ``table_dir`` has no manifest (the reader then infers)."""
+    jvm, fs = hadoop_fs(spark, table_dir)
+    path = jvm.org.apache.hadoop.fs.Path(f"{table_dir}/{SCHEMA_MANIFEST}")
+    if not fs.exists(path):
+        return None
+    stream = fs.open(path)
+    try:
+        raw = jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+    finally:
+        stream.close()
+    return T.StructType.fromJson(json.loads(bytes(raw)))
 
 
 def recover_dir(spark: SparkSession, path: str) -> bool:

@@ -62,8 +62,17 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from retail_etl_pipeline_airflow_s3_athena_spark.functions.fsutil import hadoop_fs, swap_dir
+from retail_etl_pipeline_airflow_s3_athena_spark.functions.fsutil import (
+    hadoop_fs,
+    swap_dir,
+    write_schema_manifest,
+)
 from retail_etl_pipeline_airflow_s3_athena_spark.functions.money import cents
+from retail_etl_pipeline_airflow_s3_athena_spark.sources.readers import read_parquet
+from retail_etl_pipeline_airflow_s3_athena_spark.sources.writers import (
+    data_schema,
+    write_keeping_manifest,
+)
 
 COMPACTED = "__compacted__"
 
@@ -125,10 +134,14 @@ def spend_partials(batch: DataFrame) -> DataFrame:
 def _write_partition(partials: DataFrame, path: str, batch_id: str) -> None:
     """Overwrite exactly the ``batch=<id>`` partition directory — the
     idempotent-replay primitive.  A retried batch replaces its own
-    partition; other batches' partitions are untouched."""
+    partition; other batches' partitions are untouched, and so is the
+    store's schema manifest while the partials' schema matches it."""
     if "=" in batch_id or "/" in batch_id:
         raise ValueError(f"invalid batch_id {batch_id!r}")
-    partials.write.mode("overwrite").parquet(f"{path}/batch={batch_id}")
+    write_keeping_manifest(
+        lambda: partials.write.mode("overwrite").parquet(f"{path}/batch={batch_id}"),
+        partials, path,
+    )
 
 
 def write_gold_partials(batch: DataFrame, path: str, batch_id: str) -> None:
@@ -167,8 +180,8 @@ def _merged(spark: SparkSession, path: str, key: str,
     """groupBy-SUM merge of the partial store.  DECIMAL(38,0) sums of
     DECIMAL(38,0) partials are exact; the ``batch`` partition column is
     read for free from the directory layout and dropped by the
-    aggregation."""
-    store = spark.read.parquet(path)
+    aggregation.  The store is read through its schema manifest."""
+    store = read_parquet(spark, path)
     return store.groupBy(key).agg(
         *[F.sum(c).cast("decimal(38,0)").alias(c) for c in partial_cols]
     )
@@ -224,9 +237,10 @@ def compact_gold_partials(
     merged = _merged(spark, path, key, partial_cols)
     tmp = f"{path}__compacting"
     merged.write.mode("overwrite").parquet(f"{tmp}/batch={COMPACTED}")
+    write_schema_manifest(spark, tmp, data_schema(merged))
     swap_dir(spark, path, tmp, "compact_gold_partials")
     return {
-        "batches_after": spark.read.parquet(path)
+        "batches_after": read_parquet(spark, path)
         .select("batch")
         .distinct()
         .count(),
@@ -356,7 +370,7 @@ def retain_gold_daily(
     # type inference would otherwise type `batch` BIGINT and the
     # `__compacted__` literal could never join the column (caught by
     # test_streaming_loop_composes_with_retention)
-    store = spark.read.parquet(path).withColumn(
+    store = read_parquet(spark, path).withColumn(
         "batch", F.col("batch").cast("string")
     )
     frontier_row = store.agg(F.max("sale_date").alias("f")).collect()[0]
@@ -378,13 +392,14 @@ def retain_gold_daily(
     new_store = folded.unionByName(live.select(*folded.columns))
     tmp = f"{path}__retaining"
     new_store.write.mode("overwrite").partitionBy("batch").parquet(tmp)
+    write_schema_manifest(spark, tmp, data_schema(new_store, ("batch",)))
     n_folded = folded.count()
     swap_dir(spark, path, tmp, "retain_gold_daily")
     _write_gold_watermark(spark, path, cutoff.isoformat())
     return {
         "cutoff": cutoff.isoformat(),
         "folded_dates": n_folded,
-        "batches_after": spark.read.parquet(path)
+        "batches_after": read_parquet(spark, path)
         .select("batch")
         .distinct()
         .count(),

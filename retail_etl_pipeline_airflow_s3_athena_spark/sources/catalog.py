@@ -7,9 +7,12 @@ them.  On Spark the catalog is ``spark_catalog``:
 - create_database        <- GlueRegistry.create_database (S11,
                             glue_registry.py:21-38)
 - register_parquet_table <- GlueRegistry.register_s3_table (S10,
-                            glue_registry.py:40-87); schema comes from
-                            the parquet footer (no hand-pinned columns,
-                            replacing _infer_columns / the crawler,
+                            glue_registry.py:40-87); the column list
+                            comes from the table's schema manifest,
+                            which the writer records in place of the
+                            reference's hand-pinned columns (S12), and
+                            from footer inference when there is none
+                            (replacing _infer_columns / the crawler,
                             S12/S13, glue_registry.py:89-182)
 
 Registration is idempotent (IF NOT EXISTS / CREATE OR REPLACE), like
@@ -20,7 +23,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from retail_etl_pipeline_airflow_s3_athena_spark.functions.fsutil import hadoop_fs
+from retail_etl_pipeline_airflow_s3_athena_spark.functions.fsutil import (
+    hadoop_fs,
+    read_schema_manifest,
+)
+from retail_etl_pipeline_airflow_s3_athena_spark.sources.readers import read_parquet
 
 
 def create_database(spark: SparkSession, name: str) -> None:
@@ -38,19 +45,38 @@ def register_parquet_table(
     """Register an external parquet location as a catalog table
     (reference glue_registry.py:40-87, S10).
 
-    Schema and partitions are discovered from the files themselves —
-    Spark's replacement for both the hard-coded column lists (S12) and
-    the Glue crawler (S13)."""
-    spark.sql(f"DROP TABLE IF EXISTS {database}.{table}")
-    partition_clause = (
-        f"PARTITIONED BY ({', '.join(partition_keys)}) " if partition_keys else ""
-    )
+    With a schema manifest at ``path`` the CREATE TABLE carries the
+    column list (no Spark job), and the partition columns are the ones
+    the directory layout adds to the manifest's.  Without one, Spark
+    infers the schema and partition columns from the files (one job),
+    as the Glue crawler would (S13); ``partition_keys`` then needs the
+    inferred column list, since Spark refuses ``PARTITIONED BY`` on a
+    CREATE TABLE without one.  A partitioned table's partitions are
+    recovered from the layout, or the catalog would hold none and
+    every query over it would read zero rows."""
+    name = f"{database}.{table}"
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    manifest = read_schema_manifest(spark, path)
+    columns, keys = "", partition_keys
+    if manifest is not None or partition_keys:
+        schema = read_parquet(spark, path)._jdf.schema()
+        columns = f"({schema.toDDL()}) "
+        if not keys:
+            keys = [c for c in schema.fieldNames() if c not in manifest.names]
+    partition_clause = f"PARTITIONED BY ({', '.join(keys)}) " if keys else ""
     spark.sql(
-        f"CREATE TABLE {database}.{table} USING PARQUET "
+        f"CREATE TABLE {name} {columns}USING PARQUET "
         f"{partition_clause}LOCATION '{path}'"
     )
-    if partition_keys:
-        spark.sql(f"MSCK REPAIR TABLE {database}.{table}")
+    if keys or (not columns and _is_partitioned(spark, name)):
+        spark.sql(f"ALTER TABLE {name} RECOVER PARTITIONS")
+
+
+def _is_partitioned(spark: SparkSession, name: str) -> bool:
+    # DESCRIBE runs no Spark job; catalog.listColumns runs one per
+    # partition of its result
+    rows = spark.sql(f"DESCRIBE TABLE {name}").collect()
+    return any(r.col_name == "# Partition Information" for r in rows)
 
 
 def write_bucketed_table(

@@ -7,6 +7,10 @@ parquet glob + concat per table (S6).  Spark equivalents:
 - S6's glob+concat is just ``spark.read.parquet(dir)`` — partition
   discovery + multi-file union are native, and Hive-style ``date=...``
   directories come back as a partition column with pruning for free.
+  The schema comes from the table's ``_schema.json`` manifest
+  (sources/writers) when it has one — the reference's hand-pinned
+  columns, recorded by the writer — and from a footer-reading
+  inference job only when it has none.
 - S1's LIMIT pushdown is ``.limit(n)`` on a jdbc reader (Spark pushes
   LIMIT 1 level down) or, better, a pushed-down ``query`` option.
 - S4: inferSchema matches the reference's behavior; production callers
@@ -23,12 +27,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from retail_etl_pipeline_airflow_s3_athena_spark.functions.fsutil import read_schema_manifest
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Read the parquet table at ``path`` with its manifest schema
+    (no Spark job) or, without a manifest, by footer inference (one
+    job).  Partition columns are discovered from the directory names
+    either way, typed as inference types them."""
+    schema = read_schema_manifest(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
 
 def read_parquet_table(spark: SparkSession, base_dir: str, table: str) -> DataFrame:
     """Read one logical table from a layer directory — replaces the
     reference's glob('**/*.parquet') + filename-prefix grouping +
     pd.concat (scripts/load.py:56-111, S6+S8+SET1)."""
-    return spark.read.parquet(f"{base_dir}/{table}")
+    return read_parquet(spark, f"{base_dir}/{table}")
 
 
 def read_bronze_csv(
@@ -405,9 +421,11 @@ def read_silver_merged(
 ) -> DataFrame:
     """Silver reader that tolerates SCHEMA DRIFT across run-date
     partitions: upstream sources add columns over time, and each
-    ``date=YYYYMMDD`` snapshot freezes the schema it saw.  A plain
-    parquet read picks ONE footer's schema (whichever file is listed
-    first) and silently drops columns the other partitions carry;
+    ``date=YYYYMMDD`` snapshot freezes the schema it saw.  The drifted
+    append removes the table's schema manifest (sources/writers), so a
+    plain parquet read infers, and picks ONE footer's schema
+    (whichever file is listed first) and silently drops columns the
+    other partitions carry;
     ``mergeSchema`` unions all footers — pre-drift partitions read the
     new columns as NULL, which is the correct backfill-free semantics.
 

@@ -14,6 +14,14 @@ reference's daily-snapshot story, README.md:205-218); downstream reads
 prune on ``date``.  Gold writes use dynamic partition overwrite
 semantics where partitioned.  No ``coalesce(1)`` anywhere — single-file
 output is a pandas artifact, not a requirement.
+
+Silver and gold tables carry a schema manifest (``_schema.json``,
+functions/fsutil): the plan's schema is known at write time without a
+job, so the writers record it and readers and catalog registrations
+skip the footer-inference job.  A reader never sees a manifest that
+disagrees with the committed files: a write whose schema differs from
+the manifest removes it BEFORE the data write, and a manifest is
+written only AFTER the commit.
 """
 
 from __future__ import annotations
@@ -22,6 +30,14 @@ import datetime as _dt
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from retail_etl_pipeline_airflow_s3_athena_spark.functions.fsutil import (
+    as_read_schema,
+    hadoop_fs,
+    read_schema_manifest,
+    write_schema_manifest,
+)
 
 
 def _run_date(run_date: str | _dt.date | None) -> str:
@@ -30,6 +46,36 @@ def _run_date(run_date: str | _dt.date | None) -> str:
     if isinstance(run_date, _dt.date):
         return run_date.strftime("%Y%m%d")
     return str(run_date)
+
+
+def data_schema(df: DataFrame, partition_cols: tuple[str, ...] = ()) -> T.StructType:
+    """The schema a read of the parquet files ``df`` writes reports for
+    them: ``df``'s columns minus the ``partitionBy`` columns, which
+    live in directory names."""
+    return as_read_schema(
+        T.StructType([f for f in df.schema.fields if f.name not in partition_cols])
+    )
+
+
+def write_keeping_manifest(write, df: DataFrame, path: str,
+                           partition_cols: tuple[str, ...] = ()) -> None:
+    """Run ``write`` — one that adds to or replaces part of the parquet
+    table at ``path`` and leaves the rest — and keep the table's schema
+    manifest true to its files.  The manifest stays only if it matches
+    ``df``'s data schema; a table that did not exist gets one after the
+    commit; a table whose files may disagree (a drifted append, or
+    files written without a manifest) is left with none, so its reads
+    infer from one footer as before."""
+    spark = df.sparkSession
+    schema = data_schema(df, partition_cols)
+    old = read_schema_manifest(spark, path)
+    if old is not None and old != schema:
+        write_schema_manifest(spark, path, None)
+    jvm, fs = hadoop_fs(spark, path)
+    fresh = old is None and not fs.exists(jvm.org.apache.hadoop.fs.Path(path))
+    write()
+    if fresh:
+        write_schema_manifest(spark, path, schema)
 
 
 def write_bronze_csv(df: DataFrame, base_dir: str, table: str) -> str:
@@ -51,20 +97,24 @@ def write_silver(
     Append mode: one ``date=YYYYMMDD`` partition per pipeline run — the
     reference's batch-snapshot model (SURVEY.md §1.1)."""
     path = f"{base_dir}/{table}"
-    (
-        df.withColumn("date", F.lit(_run_date(run_date)))
-        .write.mode("append")
+    out = df.withColumn("date", F.lit(_run_date(run_date)))
+    write_keeping_manifest(
+        lambda: out.write.mode("append")
         .partitionBy("date")
         .option("compression", "snappy")
-        .parquet(path)
+        .parquet(path),
+        out, path, ("date",),
     )
     return path
 
 
 def write_gold(df: DataFrame, base_dir: str, table: str) -> str:
-    """Gold sink: overwrite Parquet (reference load.py:176-177 etc., S7)."""
+    """Gold sink: overwrite Parquet (reference load.py:176-177 etc., S7).
+    The overwrite deletes the directory, old manifest included, before
+    the job runs; the new manifest lands after the commit."""
     path = f"{base_dir}/{table}"
     df.write.mode("overwrite").option("compression", "snappy").parquet(path)
+    write_schema_manifest(df.sparkSession, path, data_schema(df))
     return path
 
 
@@ -97,12 +147,13 @@ def backfill_silver_partition(
     out = df.withColumn("date", F.lit(_run_date(run_date)))
     if target_files is not None:
         out = out.repartition(target_files)
-    (
-        out.write.mode("overwrite")
+    write_keeping_manifest(
+        lambda: out.write.mode("overwrite")
         .partitionBy("date")
         .option("partitionOverwriteMode", "dynamic")
         .option("compression", "snappy")
-        .parquet(path)
+        .parquet(path),
+        out, path, ("date",),
     )
     return path
 

@@ -39,6 +39,15 @@ def sf_dir():
     return SF_DIR
 
 
+def jobs_submitted(spark, action) -> int:
+    """Spark jobs ``action`` submits, from the DAG scheduler's job-id
+    counter (every thread and job group counts)."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = int(dag.nextJobId())
+    action()
+    return int(dag.nextJobId()) - before
+
+
 # The analytics entries register shared temp views and keep
 # module-global gold cache state (plans/analytics._GOLD_STATE) — NOT
 # safe to run concurrently with each other or themselves.  Every other

@@ -12,6 +12,7 @@ from pyspark.sql import types as T
 
 from retail_etl_pipeline_airflow_s3_athena_spark.functions import quality
 from retail_etl_pipeline_airflow_s3_athena_spark.functions.jobs import observed_count
+from tests.conftest import jobs_submitted
 
 GOLD_SCHEMAS = {
     "daily_sales_summary": "order_date date, revenue double, total_orders long, total_items long",
@@ -94,15 +95,6 @@ def _parent_report(gold_tables, silver_tables=None):
     return report
 
 
-def _jobs_submitted(spark, action) -> int:
-    """Spark jobs ``action`` submits, from the DAG scheduler's job-id
-    counter (every thread and job group counts)."""
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    before = int(dag.nextJobId())
-    action()
-    return int(dag.nextJobId()) - before
-
-
 def _as_parquet(spark, tmp_path, tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
     out = {}
     for name, df in tables.items():
@@ -123,9 +115,9 @@ def test_quality_rollup_job_budget(spark, tmp_path):
         {"sale_transactions": _table(spark, [(1, 2, 3, 4.0, "x")] * 3, SILVER_SCHEMA)},
     )
     quality.run_data_quality_checks(golds)  # warm: first-use planning
-    n_gold = _jobs_submitted(spark, lambda: quality.run_data_quality_checks(golds))
+    n_gold = jobs_submitted(spark, lambda: quality.run_data_quality_checks(golds))
     assert n_gold <= 2, n_gold
-    n_both = _jobs_submitted(
+    n_both = jobs_submitted(
         spark, lambda: quality.run_data_quality_checks(golds, silver_tables=silver)
     )
     assert n_both <= 3, n_both

@@ -10,7 +10,11 @@ import json
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-SCHEMA_MANIFEST = "_schema.json"
+# A dot name: Spark's parquet file listing skips names starting with
+# "_" or ".", but ALTER TABLE ... RECOVER PARTITIONS skips only
+# _SUCCESS, _temporary and dot names (and logs every other file it
+# finds at a table root as a WARN).
+SCHEMA_MANIFEST = ".schema.json"
 
 
 def hadoop_fs(spark: SparkSession, path: str):
@@ -42,11 +46,11 @@ def write_schema_manifest(
     spark: SparkSession, table_dir: str, schema: T.StructType | None
 ) -> None:
     """Record the data schema (partition columns excluded) of the
-    parquet files under ``table_dir`` in ``<table_dir>/_schema.json``,
+    parquet files under ``table_dir`` in ``<table_dir>/.schema.json``,
     so reads and catalog registrations skip the footer-reading
     inference job.  ``None`` removes the manifest: the files' schema is
-    no longer known to be uniform.  Spark's file listing skips names
-    starting with ``_``, so readers of the data never see it.
+    no longer known to be uniform.  Spark's file listing and partition
+    recovery both skip dot names, so readers of the data never see it.
 
     Write it only after the data commit, and remove it before a data
     write that may leave files of another schema.  The manifest is

@@ -6,10 +6,10 @@ built by an offline job and then queried by thousands of online
 calls that must never pay a Lloyd round.  This module adds the
 serving discipline:
 
-- ``write_ann_index(embeddings, path)``: one training pass (the
-  exact ``pq._train`` + IVF coarse assignment used by
-  ``ivf_pq_topk``), persisted as three parquet tables under
-  ``path``:
+- ``write_ann_index(embeddings, path)``: one ``pq._train`` model
+  (the value ``pq.ivf_pq_topk_for`` trains) and the shared
+  ``similarity._nearest_cell`` coarse assignment, persisted as three
+  parquet tables under ``path``:
 
   * ``centroids/``  — (label, pos, val): coarse IVF centroids,
     exploded to scalars (K·dim rows — tiny).
@@ -23,13 +23,14 @@ serving discipline:
 
 - ``ann_query(spark, path, ...)``: plans the ADC top-k against the
   PERSISTED tables.  Zero training stages: centroids and codebooks
-  are two bounded parquet reads (broadcast), the probe list is a
-  driver-side literal IN-filter (n_queries·nprobe values — the
-  collect is bounded by the calibration-query contract), and the
-  scan+score is the same exact-e6 ADC aggregation as
-  ``pq.ivf_pq_topk``, so ``write_ann_index`` → ``ann_query``
-  reproduces ``ivf_pq_topk`` bit-for-bit — the gate entry's oracle
-  IS the ivf_pq_topk twin.
+  are two bounded parquet reads (broadcast), the probe list
+  (``similarity._probe``) is a driver-side literal IN-filter
+  (n_queries·nprobe values — the collect is bounded by the
+  calibration-query contract), and the scan+score is
+  ``pq._adc_table`` + ``pq._adc_topk`` — the calls
+  ``pq.ivf_pq_topk_for`` makes — so ``write_ann_index`` →
+  ``ann_query`` reproduces ``ivf_pq_topk`` bit-for-bit: the gate
+  entry's oracle IS the ivf_pq_topk twin.
 
 Determinism carries through parquet: codebook/centroid values are
 dround(6) doubles (exact binary round-trip), codes and cells are
@@ -38,46 +39,47 @@ integers, and every tie-break is pinned upstream.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from retail_etl_pipeline_airflow_s3_athena_spark.functions.caching import (
     attach_cached_deps,
     carried_deps,
     local_relation,
-    materialize_model,
 )
 from retail_etl_pipeline_airflow_s3_athena_spark.functions.fsutil import hadoop_fs, swap_dir
 from retail_etl_pipeline_airflow_s3_athena_spark.functions.jobs import (
     observed_count,
     run_jobs,
 )
-from retail_etl_pipeline_airflow_s3_athena_spark.functions.money import (
-    cents,
-    sql_cents,
-)
+from retail_etl_pipeline_airflow_s3_athena_spark.functions.money import sql_cents
 from retail_etl_pipeline_airflow_s3_athena_spark.operators.pq import (
     M_SUB,
     PQ_ROUNDS,
     SUB_DIM,
+    _adc_table,
+    _adc_topk,
     _assign,
-    _l2sq,
     _sql_l2sq,
     _sql_train_ctes,
     _sub_corpus,
+    _subvectors,
     _train,
+    corpus_queries,
     exact_subspace_topk_for,
     ivf_pq_topk_for,
     oracle_ivf_pq_topk_sql,
 )
 from retail_etl_pipeline_airflow_s3_athena_spark.operators.similarity import (
     EMB_DIM,
-    _centroid_vectors,
+    _cents_norm,
+    _nearest_cell,
     _normed,
-    _pair_cosine,
+    _probe,
+    _query_vecs,
+    _reassemble_vec,
     _sql_cosine,
     _sql_vec,
-    dot,
 )
 
 N_QUERIES = 5
@@ -94,51 +96,6 @@ CODES_SCHEMA = "vec_id BIGINT, m INT, code INT, cell INT"
 TOMBSTONES_SCHEMA = "vec_id BIGINT"
 
 
-def _reassemble_vec(df: DataFrame, key_cols: list[str], out: str) -> DataFrame:
-    """(keys..., pos, val) -> (keys..., out: array<double>), the
-    position-sorted struct-collect idiom (deterministic under any
-    partitioning)."""
-    return df.groupBy(*key_cols).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "val"))),
-            lambda s: s.val,
-        ).alias(out)
-    )
-
-
-def _cell_assign(
-    embeddings: DataFrame,
-    dim: int = EMB_DIM,
-    coarse: DataFrame | None = None,
-) -> DataFrame:
-    """(vec_id, cell): nearest coarse centroid by cosine, the
-    ``ivf_pq_topk`` argmax discipline (max_by over the broadcast
-    centroid table, (cos desc, label asc) pinned).  ``coarse``
-    (label, cv, cnrm) defaults to centroids trained on ``embeddings``;
-    the append path passes the PERSISTED table instead."""
-    corpus = _normed(embeddings, dim)
-    if coarse is None:
-        coarse = _centroid_vectors(embeddings).select(
-            "label", "cv",
-            F.sqrt(dot(F.col("cv"), F.col("cv"), dim)).alias("cnrm"),
-        )
-    return (
-        corpus.crossJoin(F.broadcast(coarse))
-        .select(
-            "vec_id", "label",
-            _pair_cosine(
-                F.col("v"), F.col("cv"), F.col("nrm"), F.col("cnrm"), dim
-            ).alias("c_cos"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.col("label"), F.struct(F.col("c_cos"), (-F.col("label")))
-            ).alias("cell")
-        )
-    )
-
-
 def write_ann_index(
     embeddings: DataFrame,
     path: str,
@@ -148,22 +105,14 @@ def write_ann_index(
 ) -> dict:
     """Train and persist the IVF-PQ index.  Returns the manifest
     (row counts per table) — the offline job's receipt.  ``model`` is
-    an optional pre-trained ``(sub, books, means, cents_vec)`` from
-    ``pq._train`` over these embeddings with these rounds."""
-    spark = embeddings.sparkSession
-    # ONE corpus centroid aggregation (materialized local), shared by
-    # the Lloyd init, the centroids write and the cell assignment —
-    # before, each of the three re-ran the 2-exchange aggregation.
-    if model is None:
-        cents_vec = materialize_model(_centroid_vectors(embeddings))
-        sub, books, means = _train(embeddings, rounds, cents_df=cents_vec)
-        own_sub = True
-    else:
-        # a maintenance loop that already trained on THIS corpus with
-        # THESE rounds (training is deterministic) hands the model in;
-        # sub's persist stays owned by the caller
-        sub, books, means, cents_vec = model
-        own_sub = False
+    an optional pre-trained ``pq._train`` model over these embeddings
+    with these rounds: a maintenance loop that already trained on THIS
+    corpus hands it in, and ``sub``'s persist stays owned by the
+    caller."""
+    own_sub = model is None
+    if own_sub:
+        model = _train(embeddings, rounds)
+    sub, books, means, cents_vec = model
 
     centroids = cents_vec.select(
         F.col("label").cast("int").alias("label"),
@@ -175,11 +124,9 @@ def write_ann_index(
         "val",
     )
     codes = _assign(sub, books).select("vec_id", "m", "code")
-    coarse = cents_vec.select(
-        "label", "cv",
-        F.sqrt(dot(F.col("cv"), F.col("cv"), dim)).alias("cnrm"),
+    cells = _nearest_cell(
+        _normed(embeddings, dim), _cents_norm(cents_vec, dim), dim
     )
-    cells = _cell_assign(embeddings, dim, coarse=coarse)
     # The three table writes are INDEPENDENT jobs (centroids/codebooks
     # project the already-materialized model; codes derives from the
     # persisted sub-corpus) — submit them together so the small jobs'
@@ -223,14 +170,23 @@ def write_ann_index(
     }
 
 
-def _read_coarse(spark: SparkSession, path: str, dim: int) -> DataFrame:
-    """(label, cv, cnrm) reassembled from the persisted centroids."""
-    return _reassemble_vec(
-        spark.read.schema(CENTROIDS_SCHEMA).parquet(f"{path}/centroids"), ["label"], "cv"
-    ).select(
-        "label", "cv",
-        F.sqrt(dot(F.col("cv"), F.col("cv"), dim)).alias("cnrm"),
+def _read_model(
+    spark: SparkSession, path: str, dim: int
+) -> tuple[DataFrame, DataFrame]:
+    """The persisted model: ((label, cv, cnrm) coarse centroids,
+    (m, code, scv) codebooks), reassembled from their exploded rows."""
+    coarse = _cents_norm(
+        _reassemble_vec(
+            spark.read.schema(CENTROIDS_SCHEMA).parquet(f"{path}/centroids"),
+            ["label"], "cv",
+        ),
+        dim,
     )
+    books = _reassemble_vec(
+        spark.read.schema(CODEBOOKS_SCHEMA).parquet(f"{path}/codebooks"),
+        ["m", "code"], "scv",
+    )
+    return coarse, books
 
 
 def append_to_ann_index(
@@ -246,16 +202,18 @@ def append_to_ann_index(
     partitioned append.  Centroids/codebooks drift as the corpus
     grows — re-training belongs to a periodic rebuild, not the
     per-batch path (same discipline as the fingerprint store's stop
-    set).  Returns the number of vectors appended."""
-    spark = new_embeddings.sparkSession
-    books = _reassemble_vec(
-        spark.read.schema(CODEBOOKS_SCHEMA).parquet(f"{path}/codebooks"), ["m", "code"], "scv"
+    set).  Returns the number of distinct vec_ids appended.
+
+    Ids must be unique, within the batch and against the index: rows
+    that share a vec_id collapse into ONE code row per subspace (the
+    assignment groups by (vec_id, m), the cell argmax by vec_id), so
+    two different embeddings under one id merge into one code whose
+    codewords and cell are each the nearest over both vectors."""
+    coarse, books = _read_model(new_embeddings.sparkSession, path, dim)
+    codes = _assign(_sub_corpus(new_embeddings), books).select(
+        "vec_id", "m", "code"
     )
-    sub = _sub_corpus(new_embeddings)
-    codes = _assign(sub, books).select("vec_id", "m", "code")
-    cells = _cell_assign(
-        new_embeddings, dim, coarse=_read_coarse(spark, path, dim)
-    )
+    cells = _nearest_cell(_normed(new_embeddings, dim), coarse, dim)
     # The appended-vector count rides the write job as an OBSERVED
     # metric (r13): the r12 shape persisted the batch across a distinct
     # count + the write (two actions); observing counts the very rows
@@ -343,42 +301,9 @@ def ann_query(
     distance table (n_queries·M·K rows, broadcast), one partial-agg
     sum + per-query top-k window.  The corpus-side scan reads ONLY
     the probed cells' files."""
-    cents_vec = _reassemble_vec(
-        spark.read.schema(CENTROIDS_SCHEMA).parquet(f"{path}/centroids"), ["label"], "cv"
-    ).select(
-        "label", "cv",
-        F.sqrt(dot(F.col("cv"), F.col("cv"), dim)).alias("cnrm"),
-    )
-    books = _reassemble_vec(
-        spark.read.schema(CODEBOOKS_SCHEMA).parquet(f"{path}/codebooks"), ["m", "code"], "scv"
-    )
-
-    # _normed reproduces EXACTLY the cast/norm path ivf_pq_topk's
-    # query side uses — required for the bit-identical-oracle contract
-    q = _normed(
-        queries.select(F.col("query_id").alias("vec_id"), "embedding"),
-        dim,
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.desc("c_cos"), F.asc("label")
-    )
-    probed = (
-        q.crossJoin(F.broadcast(cents_vec))
-        .select(
-            "query_id", "label",
-            _pair_cosine(
-                F.col("qv"), F.col("cv"), F.col("qnrm"), F.col("cnrm"), dim
-            ).alias("c_cos"),
-        )
-        .withColumn("rn", F.row_number().over(probe_w))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", F.col("label").alias("cell"))
-    )
+    coarse, books = _read_model(spark, path, dim)
+    q = _query_vecs(queries, dim)
+    probed = _probe(q, coarse, nprobe, dim)
     # Bounded collect (calibration-query contract): the literal cell
     # list is what turns the codes read into a partition-PRUNED scan.
     # One collect materializes BOTH the probe list (n_queries·nprobe
@@ -393,26 +318,7 @@ def ann_query(
         F.col("cell").isin(probe_cells)
     )
 
-    q_sub = q.select(
-        "query_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).cast("int").alias("m"),
-                        F.slice(
-                            F.col("qv"), m * SUB_DIM + 1, SUB_DIM
-                        ).alias("sv"),
-                    )
-                    for m in range(M_SUB)
-                ]
-            )
-        ).alias("e"),
-    ).select("query_id", F.col("e.m").alias("m"), F.col("e.sv").alias("sv"))
-    dist_table = q_sub.join(F.broadcast(books), "m").select(
-        "query_id", "m", "code",
-        cents(_l2sq(F.col("sv"), F.col("scv")), 6).alias("pd_e6"),
-    )
+    dist_table = _adc_table(_subvectors(q, ["query_id"], F.col("qv")), books)
 
     cand = codes.join(F.broadcast(probed), "cell").filter(
         F.col("vec_id") != F.col("query_id")
@@ -423,27 +329,9 @@ def ann_query(
         # neighbors (broadcast anti-join — the set is bounded by
         # delete traffic between compactions)
         cand = cand.join(F.broadcast(tomb), "vec_id", "left_anti")
-    scored = (
-        cand.join(F.broadcast(dist_table), ["query_id", "m", "code"])
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("pd_e6").alias("adc_e6"))
+    return _adc_topk(
+        cand.join(F.broadcast(dist_table), ["query_id", "m", "code"]), k
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_e6"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_e6", "rank")
-    )
-
-
-def corpus_queries(embeddings: DataFrame, n_queries: int = N_QUERIES) -> DataFrame:
-    """The pq-family calibration query set: the first ``n_queries``
-    corpus vectors (self-matches are excluded inside ann_query)."""
-    return embeddings.filter(
-        F.col("vec_id") < n_queries
-    ).select(F.col("vec_id").alias("query_id"), "embedding")
 
 
 # ---------------------------------------------------------------------------
@@ -578,9 +466,9 @@ def ann_index_staleness(
     """The measured rebuild trigger: per query, recall@k of the
     PERSISTED (appended, never-retrained) index vs a FRESH retrain on
     the current corpus, both against the exact subspace-integer-grid
-    top-k.  ``model`` optionally carries a pre-trained
-    ``(sub, books, cents_vec)`` over ``current`` for the fresh side
-    (see ``pq.ivf_pq_topk_for``).  Output (query_id, k, stale_hits, fresh_hits,
+    top-k.  ``model`` optionally carries a pre-trained ``pq._train``
+    model over ``current`` for the fresh side (see
+    ``pq.ivf_pq_topk_for``).  Output (query_id, k, stale_hits, fresh_hits,
     stale_recall_e6, fresh_recall_e6, recall_drop_e6); a sustained
     positive drop is the WHEN-to-rebuild signal the append path's
     docstring defers to (the ``pq_recall`` evaluation pattern applied
@@ -663,18 +551,16 @@ def maintain_ann_index(
     from retail_etl_pipeline_airflow_s3_athena_spark.functions.caching import (
         release_cached,
     )
-    from retail_etl_pipeline_airflow_s3_athena_spark.operators.pq import _train
 
     # ONE training pass over the current corpus, shared by the fresh
     # comparator inside the staleness measurement AND the conditional
     # rebuild below — training is deterministic (dround(6) means,
     # pinned tie-breaks), so the reuse is bit-identical to retraining.
-    cents_vec = materialize_model(_centroid_vectors(current))
-    sub, books, means = _train(current, rounds, cents_df=cents_vec)
+    model = _train(current, rounds)
     try:
         stale_df = ann_index_staleness(
             spark, path, current, queries, k, nprobe, rounds, dim,
-            model=(sub, books, cents_vec),
+            model=model,
         )
         rows = stale_df.collect()
         release_cached(stale_df)
@@ -683,12 +569,9 @@ def maintain_ann_index(
         )
         rebuilt = bool(rows) and mean_drop >= rebuild_drop_e6
         if rebuilt:
-            write_ann_index(
-                current, path, rounds, dim,
-                model=(sub, books, means, cents_vec),
-            )
+            write_ann_index(current, path, rounds, dim, model=model)
     finally:
-        sub.unpersist()
+        model[0].unpersist()
     if rebuilt:
         if not _tombstone_files(spark, path):
             # a rebuild writes the compacted layout (one sorted file

@@ -42,6 +42,14 @@ The per-query top-k window is partitioned by query_id (parallelism =
 |queries|, each task streaming its query's candidate rows) — the same
 bounded-query contract as ``cosine_topk``; an unbounded query set
 should instead route through the LSH/IVF candidate pruning first.
+
+Each primitive is written once: here the M-way split
+(``_subvectors``), the codeword argmin (``_assign``), the Lloyd
+rounds (``_lloyd_rounds``), the one training entry point and model
+value (``_train``) and the ADC table + ranking (``_adc_table``,
+``_adc_topk``); in ``similarity`` the cell primitives (``_cents_norm``,
+``_nearest_cell``, ``_probe``, ``_reassemble_vec``,
+``_member_means``).  ``annindex`` serves from the same calls.
 """
 
 from __future__ import annotations
@@ -58,21 +66,24 @@ from retail_etl_pipeline_airflow_s3_athena_spark.functions.caching import (
 )
 from retail_etl_pipeline_airflow_s3_athena_spark.functions.money import (
     cents,
-    money_avg,
     sql_cents,
     sql_money_avg,
 )
 from retail_etl_pipeline_airflow_s3_athena_spark.operators.similarity import (
     EMB_DIM,
     _as_double,
+    _as_queries,
     _centroid_vectors,
+    _cents_norm,
     _drop_null_vecs,
+    _member_means,
+    _nearest_cell,
     _normed,
-    _pair_cosine,
+    _probe,
+    _query_vecs,
     _sql_centroid_ctes,
     _sql_cosine,
     _sql_vec,
-    dot,
 )
 from retail_etl_pipeline_airflow_s3_athena_spark.operators.text import dround, sql_dround
 
@@ -115,53 +126,33 @@ def _sql_l2sq(a: str, b: str) -> str:
     )
 
 
+def _subvectors(df: DataFrame, keys: list[str], vec: Column) -> DataFrame:
+    """(keys..., m, sv): ``vec`` split into M_SUB contiguous SUB_DIM
+    slices — a narrow projection (explode of M struct slices), no
+    shuffle."""
+    entries = F.array(
+        *[
+            F.struct(
+                F.lit(m).cast("int").alias("m"),
+                F.slice(vec, m * SUB_DIM + 1, SUB_DIM).alias("sv"),
+            )
+            for m in range(M_SUB)
+        ]
+    )
+    return df.select(*keys, F.explode(entries).alias("e")).select(
+        *keys, F.col("e.m").alias("m"), F.col("e.sv").alias("sv")
+    )
+
+
 def _sub_corpus(embeddings: DataFrame) -> DataFrame:
-    """(vec_id, m, sv): each vector split into M contiguous subvectors
-    — a narrow projection (explode of M struct slices), no shuffle."""
-    v = _as_double(F.col("embedding"))
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(m).cast("int").alias("m"),
-                F.slice(v, m * SUB_DIM + 1, SUB_DIM).alias("sv"),
-            )
-            for m in range(M_SUB)
-        ]
+    """(vec_id, m, sv): each vector split into M subvectors."""
+    return _subvectors(
+        _drop_null_vecs(embeddings), ["vec_id"], _as_double(F.col("embedding"))
     )
-    return (
-        _drop_null_vecs(embeddings)
-        .select("vec_id", F.explode(entries).alias("e"))
-        .select("vec_id", F.col("e.m").alias("m"), F.col("e.sv").alias("sv"))
-    )
-
-
-def _init_codebooks(
-    embeddings: DataFrame, cents_df: DataFrame | None = None
-) -> DataFrame:
-    """(m, code, scv): per-subspace codebooks seeded from the
-    per-label centroid slices (slice of the mean == mean of the
-    slice, so this is exactly ``label_centroids`` restated).
-    ``cents_df`` lets a caller that already materialized the (label,
-    cv) centroid table share it instead of re-aggregating the
-    corpus."""
-    if cents_df is None:
-        cents_df = _centroid_vectors(embeddings)  # (label, cv)
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(m).cast("int").alias("m"),
-                F.slice(F.col("cv"), m * SUB_DIM + 1, SUB_DIM).alias("scv"),
-            )
-            for m in range(M_SUB)
-        ]
-    )
-    return cents_df.select(
-        F.col("label").cast("int").alias("code"), F.explode(entries).alias("e")
-    ).select(F.col("e.m").alias("m"), "code", F.col("e.scv").alias("scv"))
 
 
 def _assign(sub: DataFrame, books: DataFrame) -> DataFrame:
-    """(vec_id, m, sv, code): nearest codeword per subvector.  The
+    """(vec_id, m, code, sv): nearest codeword per subvector.  The
     M*K scored candidates per (vec_id, m) collapse map-side —
     ``min_by`` over the (distance, code) struct partial-merges before
     the exchange, and the struct comparison pins the (d asc, code asc)
@@ -180,74 +171,30 @@ def _assign(sub: DataFrame, books: DataFrame) -> DataFrame:
     )
 
 
-def _book_means(assigned: DataFrame) -> DataFrame:
-    """(m, code, pos, val, n_members): element-wise codeword means,
-    dround(6) on the exact scaled-integer average (order-independent;
-    the ``kmeans_fit`` discipline)."""
-    return (
-        assigned.select("m", "code", F.posexplode("sv").alias("pos", "x"))
-        .groupBy("m", "code", "pos")
-        .agg(
-            dround(money_avg("x", 8), 6).alias("val"),
-            F.count("*").alias("n_members"),
-        )
-        .withColumn("pos", F.col("pos").cast("long"))
-    )
+def _lloyd_rounds(
+    sub: DataFrame, books: DataFrame, rounds: int
+) -> tuple[DataFrame, list, T.StructType]:
+    """``rounds`` Lloyd rounds over the (vec_id, m, sv) subvector
+    corpus from the (m, code, scv) ``books``.  Returns (final books,
+    the last round's (m, code, pos, val, n_members) mean rows, their
+    schema).
 
-
-def _reassemble(means: DataFrame) -> DataFrame:
-    """(m, code, scv) for the next round / the encode pass."""
-    return means.groupBy("m", "code").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "val"))),
-            lambda s: s.val,
-        ).alias("scv")
-    )
-
-
-def _train(
-    embeddings: DataFrame,
-    rounds: int,
-    cents_df: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Run the per-subspace Lloyd loop.  Returns (sub, books, means)
-    where ``sub`` is the PERSISTED subvector corpus (ownership passes
-    to the caller via ``attach_cached_deps``), ``books`` the final
-    codebooks, and ``means`` the final exploded rows.
-
-    ``books``/``means`` come back as driver-LOCAL relations
-    (``materialize_model``): each Lloyd round is ONE bounded job (the
-    corpus assign + mean agg, collected as M*K*SUB_DIM rows), and
-    downstream consumers that reference the codebooks several times
-    (ADC distance table + code assignment) no longer re-evaluate the
-    whole training chain per reference — before this, ivf_pq_topk's
-    physical plan carried 86 Exchange nodes of duplicated Lloyd
-    subtree (plans/r12/ivf_pq_topk_before.txt).  The per-round books
-    reassembly happens on the collected rows at the driver (sort by
-    pos — exactly ``_reassemble``'s array_sort on unique pos), so the
-    values are bit-identical."""
-    if rounds < 1:
-        raise ValueError(
-            f"rounds={rounds}: PQ training needs at least one Lloyd "
-            "round (the init codebooks have no membership counts)"
-        )
-    spark = embeddings.sparkSession
-    sub = _sub_corpus(embeddings).persist()
-    books = _init_codebooks(embeddings, cents_df)
-    if cents_df is None:
-        # no shared centroid table: truncate the corpus-aggregation
-        # lineage once so round 1 doesn't re-run it per reference
-        books = materialize_model(books)
-    means = None
-    for rnd in range(rounds):
-        means_plan = _book_means(_assign(sub, books))
+    Each round is ONE bounded job: the corpus assign + mean aggregation
+    is collected (M*K*SUB_DIM rows) and the next books are reassembled
+    from those rows at the driver (sort by pos — exactly
+    ``_reassemble_vec``'s array_sort on unique pos, so the values are
+    bit-identical) and re-emitted as a driver-LOCAL relation.
+    Consumers that reference the books several times (ADC distance
+    table + code assignment) then never re-evaluate the training chain
+    — before, ivf_pq_topk's physical plan carried 86 Exchange nodes of
+    duplicated Lloyd subtree (plans/r12/ivf_pq_topk_before.txt).  This
+    is the opposite strategy to ``similarity.kmeans_fit``, whose K-row
+    centroid table is referenced once per round and chains lazily; the
+    round body (argmin assign, ``_member_means``) is the same shape."""
+    spark = sub.sparkSession
+    for _ in range(rounds):
+        means_plan = _member_means(_assign(sub, books), ["m", "code"], "sv")
         rows = means_plan.collect()
-        if rnd == rounds - 1:
-            # only the final round's exploded means are consumed
-            # (codebook writes / pq_codebooks); building the local
-            # relation per round would pay an extra driver relation
-            # per round for nothing
-            means = local_relation(spark, rows, means_plan.schema)
         by_mc: dict[tuple, list] = {}
         for r in rows:
             by_mc.setdefault((r["m"], r["code"]), []).append(
@@ -261,13 +208,90 @@ def _train(
             ],
             BOOKS_SCHEMA,
         )
-    return sub, books, means
+    return books, rows, means_plan.schema
+
+
+def _train(embeddings: DataFrame, rounds: int) -> tuple:
+    """The one IVF-PQ training entry point.  Returns the model
+    ``(sub, books, means, cents_vec)``:
+
+    - ``sub``: the PERSISTED (vec_id, m, sv) subvector corpus;
+      ownership passes to the caller (``attach_cached_deps`` or
+      ``unpersist``);
+    - ``books``: the final (m, code, scv) codebooks;
+    - ``means``: the final round's (m, code, pos, val, n_members)
+      exploded rows;
+    - ``cents_vec``: the (label, cv) coarse IVF centroids.
+
+    ``cents_vec``, ``books`` and ``means`` are driver-LOCAL relations
+    (``materialize_model``; ``_lloyd_rounds``).  ONE corpus centroid
+    aggregation serves the codebook init (per-subspace slices of the
+    per-label centroids — slice of the mean == mean of the slice, so
+    this is exactly ``label_centroids`` restated), the coarse cell
+    assignment and the probe scoring.  Training is deterministic
+    (dround(6) means, pinned tie-breaks), so a caller that trains once
+    and hands the model to several consumers gets bit-identical
+    results to retraining per consumer."""
+    if rounds < 1:
+        raise ValueError(
+            f"rounds={rounds}: PQ training needs at least one Lloyd "
+            "round (the init codebooks have no membership counts)"
+        )
+    cents_vec = materialize_model(_centroid_vectors(embeddings))
+    init = _subvectors(
+        cents_vec.select(F.col("label").cast("int").alias("code"), "cv"),
+        ["code"], F.col("cv"),
+    ).withColumnRenamed("sv", "scv")
+    sub = _sub_corpus(embeddings).persist()
+    books, rows, schema = _lloyd_rounds(sub, init, rounds)
+    means = local_relation(embeddings.sparkSession, rows, schema)
+    return sub, books, means, cents_vec
+
+
+def _adc_table(
+    q_sub: DataFrame, books: DataFrame, keys: tuple[str, ...] = ("query_id",)
+) -> DataFrame:
+    """(keys..., m, code, pd_e6): per query subvector, the exact e6
+    squared-L2 distance to every codeword of its subspace — the bounded
+    ADC lookup table its consumers broadcast."""
+    return q_sub.join(F.broadcast(books), "m").select(
+        *keys, "m", "code",
+        cents(_l2sq(F.col("sv"), F.col("scv")), 6).alias("pd_e6"),
+    )
+
+
+def _adc_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, adc_e6, rank) from (query_id, vec_id,
+    pd_e6) lookup rows: the approximate squared L2 is the exact BIGINT
+    sum of a candidate's M lookups (squared L2 decomposes over
+    subspaces); each query keeps its k smallest under the pinned (adc
+    asc, neighbor asc) tie-break."""
+    scored = pairs.groupBy(
+        "query_id", F.col("vec_id").alias("neighbor_id")
+    ).agg(F.sum("pd_e6").alias("adc_e6"))
+    w = Window.partitionBy("query_id").orderBy(
+        F.asc("adc_e6"), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "adc_e6", "rank")
+    )
+
+
+def corpus_queries(embeddings: DataFrame, n_queries: int = N_QUERIES) -> DataFrame:
+    """The pq-family calibration query set: the first ``n_queries``
+    corpus vectors as (query_id, embedding); self-matches are excluded
+    by every consumer."""
+    return embeddings.filter(
+        F.col("vec_id") < n_queries
+    ).select(F.col("vec_id").alias("query_id"), "embedding")
 
 
 def pq_codebooks(embeddings: DataFrame, rounds: int = PQ_ROUNDS) -> DataFrame:
     """The trained codebooks, exploded: (m, code, pos, val,
     n_members).  Bounded output: M * K * SUB_DIM rows."""
-    sub, _, means = _train(embeddings, rounds)
+    sub, _, means, _ = _train(embeddings, rounds)
     return attach_cached_deps(means.orderBy("m", "code", "pos"), sub)
 
 
@@ -276,7 +300,7 @@ def pq_codes(embeddings: DataFrame, rounds: int = PQ_ROUNDS) -> DataFrame:
     order — the compressed representation (M bytes/vector at K<=256;
     the 100 TB memory story).  One more assignment pass against the
     trained books."""
-    sub, books, _ = _train(embeddings, rounds)
+    sub, books, _, _ = _train(embeddings, rounds)
     out = (
         _assign(sub, books)
         .groupBy("vec_id")
@@ -302,37 +326,21 @@ def pq_topk(
 
     Per query, the distance to every codeword is precomputed as an
     exact e6 integer (a bounded n_queries * M * K table, broadcast);
-    the corpus contributes only its (vec_id, m, code) rows, and the
-    approximate squared L2 is the exact BIGINT sum of M table
-    lookups — squared L2 decomposes over subspaces.  Ranking is the
-    (adc asc, neighbor asc) pinned tie-break."""
-    sub, books, _ = _train(embeddings, rounds)
+    the corpus contributes only its (vec_id, m, code) rows
+    (``_adc_table`` / ``_adc_topk``)."""
+    sub, books, _, _ = _train(embeddings, rounds)
     codes = _assign(sub, books).select("vec_id", "m", "code")
-    dist_table = (
-        sub.filter(F.col("vec_id") < n_queries)
-        .select(F.col("vec_id").alias("query_id"), "m", "sv")
-        .join(F.broadcast(books), "m")
-        .select(
-            "query_id", "m", "code",
-            cents(_l2sq(F.col("sv"), F.col("scv")), 6).alias("pd_e6"),
-        )
+    dist_table = _adc_table(
+        sub.filter(F.col("vec_id") < n_queries).select(
+            F.col("vec_id").alias("query_id"), "m", "sv"
+        ),
+        books,
     )
-    scored = (
-        codes.join(
-            F.broadcast(dist_table),
-            ["m", "code"],
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("pd_e6").alias("adc_e6"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_e6"), F.asc("neighbor_id")
-    )
-    out = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_e6", "rank")
+    out = _adc_topk(
+        codes.join(F.broadcast(dist_table), ["m", "code"]).filter(
+            F.col("vec_id") != F.col("query_id")
+        ),
+        k,
     )
     return attach_cached_deps(out, sub)
 
@@ -345,8 +353,8 @@ def pq_recall(
 ) -> DataFrame:
     """ANN quality evaluation: (query_id, k, n_hits, recall_e6) —
     recall@k of the ADC scan against the EXACT scan on the same
-    subspace-decomposed integer distance grid (exact d = Σ_m
-    cents(l2sq(q_m, v_m), 6); the ADC approximation replaces v_m by
+    subspace-decomposed integer distance grid
+    (``exact_subspace_topk_for``; the ADC approximation replaces v_m by
     its codeword, so n_hits isolates pure quantization error — no
     metric or rounding confound).
 
@@ -360,23 +368,8 @@ def pq_recall(
     pinned (distance asc, neighbor asc) tie-break."""
     approx = pq_topk(embeddings, n_queries, k, rounds)
     hits = approx.select("query_id", "neighbor_id", F.lit(1).alias("_hit"))
-    sub = _sub_corpus(embeddings)
-    q = sub.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), "m", F.col("sv").alias("qv")
-    )
-    exact_scored = (
-        sub.join(F.broadcast(q), "m")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum(cents(_l2sq(F.col("qv"), F.col("sv")), 6)).alias("d_e6"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("d_e6"), F.asc("neighbor_id")
-    )
-    exact_topk = (
-        exact_scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id")
+    exact_topk = exact_subspace_topk_for(
+        embeddings, corpus_queries(embeddings, n_queries), k
     )
     out = (
         exact_topk.join(hits, ["query_id", "neighbor_id"], "left")
@@ -414,90 +407,12 @@ def ivf_pq_topk(
     recall but changes only the codebook input frame, not the plan
     shape; the routing/pruning structure graded here is identical.
 
-    Plan: cell assignment reuses the ``ivf_topk`` argmax discipline
-    (``max_by`` over the broadcast centroid table — map-side partial
-    merge, (cos desc, label asc) pinned); candidates are the
-    (query_id, vec_id) pairs from a broadcast join of the bounded
-    probed-cell list against the cell table; the ADC sum is the same
-    exact-integer aggregation as ``pq_topk`` restricted to candidates.
-    """
-    # ONE corpus centroid aggregation, materialized as a K-row local
-    # relation shared by the Lloyd init, the cell assignment and the
-    # probe scoring (before: each reference re-ran the 2-exchange
-    # centroid aggregation).
-    cents_vec = materialize_model(_centroid_vectors(embeddings))
-    sub, books, _ = _train(embeddings, rounds, cents_df=cents_vec)
-    codes = _assign(sub, books).select("vec_id", "m", "code")
-
-    corpus = _normed(embeddings, dim)
-    coarse = cents_vec.select(
-        "label", "cv",
-        F.sqrt(dot(F.col("cv"), F.col("cv"), dim)).alias("cnrm"),
+    ``ivf_pq_topk_for`` over the vec_id < n_queries calibration set
+    (``corpus_queries``)."""
+    return ivf_pq_topk_for(
+        embeddings, corpus_queries(embeddings, n_queries), k, nprobe,
+        rounds, dim,
     )
-    cells = (
-        corpus.crossJoin(F.broadcast(coarse))
-        .select(
-            "vec_id", "label",
-            _pair_cosine(
-                F.col("v"), F.col("cv"), F.col("nrm"), F.col("cnrm"), dim
-            ).alias("c_cos"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.col("label"), F.struct(F.col("c_cos"), (-F.col("label")))
-            ).alias("cell")
-        )
-    )
-    queries = corpus.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.desc("c_cos"), F.asc("label")
-    )
-    probed = (
-        queries.crossJoin(F.broadcast(coarse))
-        .select(
-            "query_id", "label",
-            _pair_cosine(
-                F.col("qv"), F.col("cv"), F.col("qnrm"), F.col("cnrm"), dim
-            ).alias("c_cos"),
-        )
-        .withColumn("rn", F.row_number().over(probe_w))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", F.col("label").alias("cell"))
-    )
-    cand = (
-        cells.join(F.broadcast(probed), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
-    )
-    dist_table = (
-        sub.filter(F.col("vec_id") < n_queries)
-        .select(F.col("vec_id").alias("query_id"), "m", "sv")
-        .join(F.broadcast(books), "m")
-        .select(
-            "query_id", "m", "code",
-            cents(_l2sq(F.col("sv"), F.col("scv")), 6).alias("pd_e6"),
-        )
-    )
-    scored = (
-        codes.join(cand, "vec_id")
-        .join(F.broadcast(dist_table), ["query_id", "m", "code"])
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("pd_e6").alias("adc_e6"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_e6"), F.asc("neighbor_id")
-    )
-    out = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_e6", "rank")
-    )
-    return attach_cached_deps(out, sub)
 
 
 def ivf_pq_topk_for(
@@ -509,112 +424,43 @@ def ivf_pq_topk_for(
     dim: int = EMB_DIM,
     model: tuple | None = None,
 ) -> DataFrame:
-    """``ivf_pq_topk`` with an EXPLICIT (query_id, embedding) query
-    set instead of the vec_id < n_queries convention — the evaluator
-    shape ``annindex.ann_index_staleness`` needs, where the
-    calibration queries come from an appended batch whose ids are
+    """IVF-PQ top-k for an EXPLICIT (query_id, embedding) query set —
+    the evaluator shape ``annindex.ann_index_staleness`` needs, where
+    the calibration queries come from an appended batch whose ids are
     shifted out of the founding range.  Self-matches (query_id equal
-    to a corpus vec_id) are excluded, exactly like ``ivf_pq_topk``.
+    to a corpus vec_id) are excluded.
 
-    Same plan discipline as ``ivf_pq_topk``: one broadcast centroid
-    argmax for cells, a bounded probed-cell broadcast, the exact-e6
-    ADC table join, pinned (adc asc, neighbor asc) tie-break.
+    Plan: cells are the ``similarity._nearest_cell`` argmax over the
+    broadcast coarse centroids; candidates are the (query_id, vec_id)
+    pairs from a broadcast join of the bounded ``similarity._probe``
+    cell list against the cell table; the score is the exact-integer
+    ``_adc_topk`` over the ``_adc_table`` lookups.
 
-    ``model`` is an optional pre-trained ``(sub, books, cents_vec)``
-    (from ``_train`` over THESE embeddings with THESE rounds): a
-    maintenance loop that both measures freshness and rebuilds trains
-    ONCE and passes it here — training is deterministic, so the reuse
-    is bit-identical.  Ownership of the persisted ``sub`` then stays
-    with the caller (not tagged on the result)."""
+    ``model`` is an optional pre-trained ``_train`` model over THESE
+    embeddings with THESE rounds: a maintenance loop that both
+    measures freshness and rebuilds trains ONCE and passes it here.
+    Ownership of the persisted ``sub`` then stays with the caller (not
+    tagged on the result)."""
+    own_deps: tuple = ()
     if model is None:
-        cents_vec = materialize_model(_centroid_vectors(embeddings))
-        sub, books, _ = _train(embeddings, rounds, cents_df=cents_vec)
-        own_deps: tuple = (sub,)
-    else:
-        sub, books, cents_vec = model
-        own_deps = ()
+        model = _train(embeddings, rounds)
+        own_deps = (model[0],)
+    sub, books, _, cents_vec = model
     codes = _assign(sub, books).select("vec_id", "m", "code")
-
-    corpus = _normed(embeddings, dim)
-    coarse = cents_vec.select(
-        "label", "cv",
-        F.sqrt(dot(F.col("cv"), F.col("cv"), dim)).alias("cnrm"),
-    )
-    cells = (
-        corpus.crossJoin(F.broadcast(coarse))
-        .select(
-            "vec_id", "label",
-            _pair_cosine(
-                F.col("v"), F.col("cv"), F.col("nrm"), F.col("cnrm"), dim
-            ).alias("c_cos"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.col("label"), F.struct(F.col("c_cos"), (-F.col("label")))
-            ).alias("cell")
-        )
-    )
-    q = _normed(
-        queries.select(F.col("query_id").alias("vec_id"), "embedding"), dim
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.desc("c_cos"), F.asc("label")
-    )
-    probed = (
-        q.crossJoin(F.broadcast(coarse))
-        .select(
-            "query_id", "label",
-            _pair_cosine(
-                F.col("qv"), F.col("cv"), F.col("qnrm"), F.col("cnrm"), dim
-            ).alias("c_cos"),
-        )
-        .withColumn("rn", F.row_number().over(probe_w))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", F.col("label").alias("cell"))
-    )
+    coarse = _cents_norm(cents_vec, dim)
+    cells = _nearest_cell(_normed(embeddings, dim), coarse, dim)
+    q = _query_vecs(queries, dim)
     cand = (
-        cells.join(F.broadcast(probed), "cell")
+        cells.join(F.broadcast(_probe(q, coarse, nprobe, dim)), "cell")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id")
     )
-    q_sub = q.select(
-        "query_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).cast("int").alias("m"),
-                        F.slice(
-                            F.col("qv"), m * SUB_DIM + 1, SUB_DIM
-                        ).alias("sv"),
-                    )
-                    for m in range(M_SUB)
-                ]
-            )
-        ).alias("e"),
-    ).select("query_id", F.col("e.m").alias("m"), F.col("e.sv").alias("sv"))
-    dist_table = q_sub.join(F.broadcast(books), "m").select(
-        "query_id", "m", "code",
-        cents(_l2sq(F.col("sv"), F.col("scv")), 6).alias("pd_e6"),
-    )
-    scored = (
-        codes.join(cand, "vec_id")
-        .join(F.broadcast(dist_table), ["query_id", "m", "code"])
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("pd_e6").alias("adc_e6"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_e6"), F.asc("neighbor_id")
-    )
-    out = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_e6", "rank")
+    dist_table = _adc_table(_subvectors(q, ["query_id"], F.col("qv")), books)
+    out = _adc_topk(
+        codes.join(cand, "vec_id").join(
+            F.broadcast(dist_table), ["query_id", "m", "code"]
+        ),
+        k,
     )
     return attach_cached_deps(out, *own_deps)
 
@@ -963,157 +809,69 @@ def ivf_pq_residual_topk(
     # reprinting the centroid-aggregation subtree.  The collect that
     # builds the relation also yields K — the r12 shape paid a
     # separate count action for it.
-    spark = embeddings.sparkSession
-    coarse_plan = _centroid_vectors(embeddings).select(
-        "label", "cv",
-        F.sqrt(dot(F.col("cv"), F.col("cv"), dim)).alias("cnrm"),
-    )
+    coarse_plan = _cents_norm(_centroid_vectors(embeddings), dim)
     coarse_rows = coarse_plan.collect()
-    coarse = local_relation(spark, coarse_rows, coarse_plan.schema)
+    coarse = local_relation(
+        embeddings.sparkSession, coarse_rows, coarse_plan.schema
+    )
     n_codes = len(coarse_rows)
+    cell_cv = F.broadcast(coarse.select(F.col("label").alias("cell"), "cv"))
     # persisted: cells feeds BOTH the residual corpus and candidate
     # generation — unpersisted, the corpus x K scoring scan would
     # execute twice (a second full corpus pass at 100 TB)
-    cells = (
-        corpus.crossJoin(F.broadcast(coarse))
-        .select(
-            "vec_id", "label",
-            _pair_cosine(
-                F.col("v"), F.col("cv"), F.col("nrm"), F.col("cnrm"), dim
-            ).alias("c_cos"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.col("label"), F.struct(F.col("c_cos"), (-F.col("label")))
-            ).alias("cell")
-        )
-        .persist()
-    )
+    cells = _nearest_cell(corpus, coarse, dim).persist()
     # residual subvector corpus: r = v - cv(cell), sliced into M parts
-    rsub_entries = F.array(
-        *[
-            F.struct(
-                F.lit(m).cast("int").alias("m"),
-                F.slice(F.col("r"), m * SUB_DIM + 1, SUB_DIM).alias("sv"),
-            )
-            for m in range(M_SUB)
-        ]
-    )
-    rsub = (
+    rsub = _subvectors(
         corpus.join(cells, "vec_id")
-        .join(
-            F.broadcast(coarse.select(F.col("label").alias("cell"), "cv")),
-            "cell",
-        )
+        .join(cell_cv, "cell")
         .select(
             "vec_id", "cell",
             F.zip_with("v", "cv", lambda a, b: a - b).alias("r"),
-        )
-        .select("vec_id", "cell", F.explode(rsub_entries).alias("e"))
-        .select(
-            "vec_id", "cell",
-            F.col("e.m").alias("m"), F.col("e.sv").alias("sv"),
-        )
-        .persist()
-    )
+        ),
+        ["vec_id", "cell"], F.col("r"),
+    ).persist()
     # Seed books materialized (K*M rows; the collect also materializes
-    # the persisted rsub cache), then each Lloyd round is one bounded
-    # job whose result is re-emitted locally — the `_train` discipline
-    # applied to the residual frame, so the codes assignment and the
-    # ADC distance table below stop re-evaluating the training chain.
-    books = materialize_model(
-        rsub.filter(F.col("vec_id") < n_codes)
-        .select("m", F.col("vec_id").cast("int").alias("code"),
-                F.col("sv").alias("scv"))
-    )
+    # the persisted rsub cache), then the `_train` Lloyd rounds on the
+    # residual frame, so the codes assignment and the ADC distance
+    # table below stop re-evaluating the training chain.
     plain = rsub.select("vec_id", "m", "sv")
-    for _ in range(rounds):
-        mrows = _book_means(_assign(plain, books)).collect()
-        by_mc: dict[tuple, list] = {}
-        for r in mrows:
-            by_mc.setdefault((r["m"], r["code"]), []).append(
-                (r["pos"], r["val"])
-            )
-        books = local_relation(
-            spark,
-            [
-                (m, code, [v for _, v in sorted(pv)])
-                for (m, code), pv in sorted(by_mc.items())
-            ],
-            BOOKS_SCHEMA,
-        )
+    books, _, _ = _lloyd_rounds(
+        plain,
+        materialize_model(
+            rsub.filter(F.col("vec_id") < n_codes)
+            .select("m", F.col("vec_id").cast("int").alias("code"),
+                    F.col("sv").alias("scv"))
+        ),
+        rounds,
+    )
     codes = _assign(plain, books).select("vec_id", "m", "code")
 
-    queries = corpus.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.desc("c_cos"), F.asc("label")
-    )
-    probed = (
-        queries.crossJoin(F.broadcast(coarse))
-        .select(
-            "query_id", "label",
-            _pair_cosine(
-                F.col("qv"), F.col("cv"), F.col("qnrm"), F.col("cnrm"), dim
-            ).alias("c_cos"),
-        )
-        .withColumn("rn", F.row_number().over(probe_w))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", F.col("label").alias("cell"))
-    )
+    queries = _as_queries(corpus.filter(F.col("vec_id") < n_queries))
+    probed = _probe(queries, coarse, nprobe, dim)
     # per-(query, probed cell) residual ADC table — n_q*nprobe*M*K rows
-    rq_entries = F.array(
-        *[
-            F.struct(
-                F.lit(m).cast("int").alias("m"),
-                F.slice(F.col("rq"), m * SUB_DIM + 1, SUB_DIM).alias("sv"),
-            )
-            for m in range(M_SUB)
-        ]
-    )
-    dist_table = (
-        probed.join(queries, "query_id")
-        .join(
-            F.broadcast(coarse.select(F.col("label").alias("cell"), "cv")),
-            "cell",
-        )
-        .select(
-            "query_id", "cell",
-            F.zip_with("qv", "cv", lambda a, b: a - b).alias("rq"),
-        )
-        .select("query_id", "cell", F.explode(rq_entries).alias("e"))
-        .select(
-            "query_id", "cell",
-            F.col("e.m").alias("m"), F.col("e.sv").alias("sv"),
-        )
-        .join(F.broadcast(books), "m")
-        .select(
-            "query_id", "cell", "m", "code",
-            cents(_l2sq(F.col("sv"), F.col("scv")), 6).alias("pd_e6"),
-        )
+    dist_table = _adc_table(
+        _subvectors(
+            probed.join(queries, "query_id")
+            .join(cell_cv, "cell")
+            .select(
+                "query_id", "cell",
+                F.zip_with("qv", "cv", lambda a, b: a - b).alias("rq"),
+            ),
+            ["query_id", "cell"], F.col("rq"),
+        ),
+        books,
+        ("query_id", "cell"),
     )
     cand = (
         cells.join(F.broadcast(probed), "cell")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", "cell")
     )
-    scored = (
-        codes.join(cand, "vec_id")
-        .join(F.broadcast(dist_table), ["query_id", "cell", "m", "code"])
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("pd_e6").alias("adc_e6"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_e6"), F.asc("neighbor_id")
-    )
-    out = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_e6", "rank")
+    out = _adc_topk(
+        codes.join(cand, "vec_id").join(
+            F.broadcast(dist_table), ["query_id", "cell", "m", "code"]
+        ),
+        k,
     )
     return attach_cached_deps(out, rsub, cells)
 
@@ -1293,36 +1051,16 @@ def pq_sdc_near_dup(
     table, so the gate is hash-exact; accuracy-wise SDC adds the
     query-side quantization error (Jégou §III.A) — right for
     corpus×corpus dedup where neither side has a raw vector."""
-    cents_vec = materialize_model(_centroid_vectors(embeddings))
-    sub, books, _ = _train(embeddings, rounds, cents_df=cents_vec)
+    sub, books, _, cents_vec = _train(embeddings, rounds)
     # persisted: the pair scoring references codes twice (both pair
     # sides) — unpersisted, the codeword assignment over the corpus
     # would run twice
     codes = _assign(sub, books).select("vec_id", "m", "code").persist()
-
-    corpus = _normed(embeddings, dim)
-    coarse = cents_vec.select(
-        "label", "cv",
-        F.sqrt(dot(F.col("cv"), F.col("cv"), dim)).alias("cnrm"),
-    )
     # persisted: the self-join below references cells twice; without
     # the persist the corpus x K cell scoring would run twice
-    cells = (
-        corpus.crossJoin(F.broadcast(coarse))
-        .select(
-            "vec_id", "label",
-            _pair_cosine(
-                F.col("v"), F.col("cv"), F.col("nrm"), F.col("cnrm"), dim
-            ).alias("c_cos"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.col("label"), F.struct(F.col("c_cos"), (-F.col("label")))
-            ).alias("cell")
-        )
-        .persist()
-    )
+    cells = _nearest_cell(
+        _normed(embeddings, dim), _cents_norm(cents_vec, dim), dim
+    ).persist()
     b1, b2 = books.alias("b1"), books.alias("b2")
     sdc = b1.join(b2, F.col("b1.m") == F.col("b2.m")).select(
         F.col("b1.m").alias("m"),

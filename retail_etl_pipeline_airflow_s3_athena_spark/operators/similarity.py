@@ -110,6 +110,127 @@ def _pair_cosine(av, bv, anrm, bnrm, dim: int = EMB_DIM) -> Column:
     return dround(dot(av, bv, dim) / (anrm * bnrm), 6)
 
 
+def _as_queries(normed: DataFrame) -> DataFrame:
+    """(vec_id, v, nrm) -> (query_id, qv, qnrm): the query side."""
+    return normed.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("nrm").alias("qnrm"),
+    )
+
+
+def _query_vecs(queries: DataFrame, dim: int = EMB_DIM) -> DataFrame:
+    """An explicit (query_id, embedding) set as (query_id, qv, qnrm),
+    through EXACTLY the corpus's ``_normed`` cast/norm path — required
+    for the bit-identical-oracle contract."""
+    return _as_queries(
+        _normed(queries.select(F.col("query_id").alias("vec_id"), "embedding"), dim)
+    )
+
+
+# ---------------------------------------------------------------------------
+# Cell primitives shared by the IVF, k-means, IVF-PQ and persisted-index
+# paths: centroid norms, nearest cell, nprobe probe, position-sorted
+# reassembly and member means.  Every tie-break is pinned here once.
+# ---------------------------------------------------------------------------
+
+def _cents_norm(cents: DataFrame, dim: int) -> DataFrame:
+    """(label, cv) -> (label, cv, cnrm): the centroid norm precomputed
+    ONCE — per-pair scoring then pays a single unrolled dot (the cross
+    term) instead of three; the same value bit-for-bit, 3x less
+    codegen."""
+    return cents.select(
+        "label", "cv",
+        F.sqrt(dot(F.col("cv"), F.col("cv"), dim)).alias("cnrm"),
+    )
+
+
+def _nearest_cell(
+    corpus: DataFrame,
+    coarse: DataFrame,
+    dim: int,
+    out: str = "cell",
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """(vec_id, out, *carry): each ``_normed`` corpus vector's nearest
+    (label, cv, cnrm) centroid by cosine, tie-break (cos desc, label
+    asc) pinned by the (c_cos, -label) ordering struct.  ``max_by``
+    aggregation, NOT a row_number window: the argmax combines map-side,
+    so the corpus x K scored rows never shuffle — only (vec_id, best)
+    pairs do.  ``carry`` columns ride along (one value per vec_id)."""
+    return (
+        corpus.crossJoin(F.broadcast(coarse))
+        .select(
+            "vec_id", *carry, "label",
+            _pair_cosine(
+                F.col("v"), F.col("cv"), F.col("nrm"), F.col("cnrm"), dim
+            ).alias("c_cos"),
+        )
+        .groupBy("vec_id")
+        .agg(
+            F.max_by(
+                F.col("label"), F.struct(F.col("c_cos"), (-F.col("label")))
+            ).alias(out),
+            *[F.first(c).alias(c) for c in carry],
+        )
+    )
+
+
+def _probe(
+    queries: DataFrame,
+    coarse: DataFrame,
+    nprobe: int,
+    dim: int,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """(query_id, *carry, cell): each (query_id, qv, qnrm) query's
+    ``nprobe`` nearest cells, (cos desc, label asc) — the same order
+    as ``_nearest_cell``, so nprobe=1 probes the assigned cell.  The
+    window is partitioned by query_id over a bounded query set."""
+    probe_w = Window.partitionBy("query_id").orderBy(
+        F.desc("c_cos"), F.asc("label")
+    )
+    return (
+        queries.crossJoin(F.broadcast(coarse))
+        .select(
+            "query_id", *carry, "label",
+            _pair_cosine(
+                F.col("qv"), F.col("cv"), F.col("qnrm"), F.col("cnrm"), dim
+            ).alias("c_cos"),
+        )
+        .withColumn("rn", F.row_number().over(probe_w))
+        .filter(F.col("rn") <= nprobe)
+        .select("query_id", *carry, F.col("label").alias("cell"))
+    )
+
+
+def _reassemble_vec(df: DataFrame, keys: list, out: str) -> DataFrame:
+    """(keys..., pos, val) -> (keys..., out: array<double>), the
+    position-sorted struct-collect idiom (deterministic under any
+    partitioning)."""
+    return df.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "val"))),
+            lambda s: s.val,
+        ).alias(out)
+    )
+
+
+def _member_means(df: DataFrame, keys: list[str], vec: str) -> DataFrame:
+    """(keys..., pos, val, n_members): element-wise mean of the ``vec``
+    arrays per key, dround(6) on the exact scaled-integer average
+    (order-independent), so both engines agree exactly."""
+    return (
+        df.select(*keys, F.posexplode(vec).alias("pos", "x"))
+        .groupBy(*keys, "pos")
+        .agg(
+            dround(money_avg("x", 8), 6).alias("val"),
+            F.count("*").alias("n_members"),
+        )
+        .withColumn("pos", F.col("pos").cast("long"))
+    )
+
+
 def cosine_topk(
     embeddings: DataFrame, n_queries: int = 5, k: int = 10, dim: int = EMB_DIM
 ) -> DataFrame:
@@ -118,11 +239,7 @@ def cosine_topk(
     Broadcast the queries; one pass over the corpus; rank per query with
     deterministic tie-break (cosine desc, neighbor id asc)."""
     corpus = _normed(embeddings, dim)
-    queries = corpus.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
+    queries = _as_queries(corpus.filter(F.col("vec_id") < n_queries))
     scored = (
         corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
         .select(
@@ -247,16 +364,7 @@ def label_centroids(embeddings: DataFrame) -> DataFrame:
 
 def _centroid_vectors(embeddings: DataFrame) -> DataFrame:
     """(label, cv: array<double>) — centroids reassembled in pos order."""
-    return (
-        label_centroids(embeddings)
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "val"))),
-                lambda s: s.val,
-            ).alias("cv")
-        )
-    )
+    return _reassemble_vec(label_centroids(embeddings), ["label"], "cv")
 
 
 def ivf_topk(
@@ -281,58 +389,13 @@ def ivf_topk(
     )
 
     corpus = _normed(embeddings, dim)
-    # centroid norms precomputed ONCE: per-pair scoring then pays a
-    # single unrolled dot (the cross term) instead of three — same
-    # value bit-for-bit (sqrt(dot(a,a))*sqrt(dot(b,b)) is the identical
-    # expression, just not re-evaluated per pair), 3x less codegen.
-    cents = _centroid_vectors(embeddings).select(
-        "label", "cv", F.sqrt(dot(F.col("cv"), F.col("cv"), dim)).alias("cnrm")
-    ).persist()
-
-    # assign each corpus vector to its best cell (cos desc, label asc).
-    # max_by aggregation, NOT a row_number window: the argmax gets
-    # map-side partial aggregation, so the corpus x K scored rows never
-    # shuffle — only (vec_id, best) pairs do.  The (c_cos, -label)
-    # ordering struct pins the tie-break.
-    assigned = (
-        corpus.crossJoin(F.broadcast(cents))
-        .select(
-            "vec_id", "v", "nrm", "label",
-            _pair_cosine(
-                F.col("v"), F.col("cv"), F.col("nrm"), F.col("cnrm"), dim
-            ).alias("c_cos"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.col("label"), F.struct(F.col("c_cos"), (-F.col("label")))
-            ).alias("cell"),
-            F.first("v").alias("v"),
-            F.first("nrm").alias("nrm"),
-        )
-        .select("vec_id", "v", "nrm", "cell")
+    cents = _cents_norm(_centroid_vectors(embeddings), dim).persist()
+    assigned = _nearest_cell(corpus, cents, dim, carry=("v", "nrm")).select(
+        "vec_id", "v", "nrm", "cell"
     )
-
-    # each query probes its nprobe nearest cells
-    queries = corpus.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.desc("c_cos"), F.asc("label")
-    )
-    probed = (
-        queries.crossJoin(F.broadcast(cents))
-        .select(
-            "query_id", "qv", "qnrm", "label",
-            _pair_cosine(
-                F.col("qv"), F.col("cv"), F.col("qnrm"), F.col("cnrm"), dim
-            ).alias("c_cos"),
-        )
-        .withColumn("rn", F.row_number().over(probe_w))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "qv", "qnrm", F.col("label").alias("cell"))
+    probed = _probe(
+        _as_queries(corpus.filter(F.col("vec_id") < n_queries)),
+        cents, nprobe, dim, carry=("qv", "qnrm"),
     )
 
     scored = (
@@ -941,67 +1004,6 @@ def oracle_embedding_near_dup_lsh_sql(
 # shape: broadcast-assign, then a distributed vector mean
 # ---------------------------------------------------------------------------
 
-def _cents_norm(cents: DataFrame, dim: int) -> DataFrame:
-    """(label, cv) -> (label, cv, cnrm): centroid norm precomputed once."""
-    return cents.select(
-        "label", "cv",
-        F.sqrt(dot(F.col("cv"), F.col("cv"), dim)).alias("cnrm"),
-    )
-
-
-def _assign_to_cents(corpus: DataFrame, cents: DataFrame, dim: int) -> DataFrame:
-    """(vec_id, v, cluster): nearest-centroid argmax via ``max_by`` —
-    the corpus x K scored rows combine map-side; only (vec_id, cluster,
-    v) reaches the exchange.  Tie-break pinned (cos desc, label asc)."""
-    return (
-        corpus.crossJoin(F.broadcast(cents))
-        .select(
-            "vec_id", "v", "label",
-            _pair_cosine(
-                F.col("v"), F.col("cv"), F.col("nrm"), F.col("cnrm"), dim
-            ).alias("c_cos"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.col("label"), F.struct(F.col("c_cos"), (-F.col("label")))
-            ).alias("cluster"),
-            F.first("v").alias("v"),
-        )
-    )
-
-
-def _cluster_means(assigned: DataFrame) -> DataFrame:
-    """(cluster, pos, val, n_members): element-wise mean per refined
-    cluster, dround(6) so both engines agree exactly."""
-    return (
-        assigned.select(
-            F.col("cluster"),
-            # v is already array<double> (from _normed)
-            F.posexplode(F.col("v")).alias("pos", "x"),
-        )
-        .groupBy("cluster", "pos")
-        .agg(
-            dround(money_avg("x", 8), 6).alias("val"),
-            F.count("*").alias("n_members"),
-        )
-        .withColumn("pos", F.col("pos").cast("long"))
-    )
-
-
-def _reassemble_cents(exploded: DataFrame, dim: int) -> DataFrame:
-    """(cluster, pos, val, ...) -> (label, cv, cnrm) for the next round."""
-    return _cents_norm(
-        exploded.groupBy(F.col("cluster").alias("label")).agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "val"))),
-                lambda st: st.val,
-            ).alias("cv")
-        ),
-        dim,
-    )
-
-
 def kmeans_fit(
     embeddings: DataFrame, rounds: int = 2, dim: int = EMB_DIM
 ) -> DataFrame:
@@ -1013,7 +1015,7 @@ def kmeans_fit(
     (vec_id, v, nrm) is normalized ONCE and persisted — each round is
     exactly one pass over it (the textbook lower bound); the K-row
     centroid table is broadcast; the argmax assignment combines
-    map-side (see ``_assign_to_cents``).  A cluster that loses all its
+    map-side (see ``_nearest_cell``).  A cluster that loses all its
     members simply drops out — deterministic in both engines.  Every
     round's means are dround(6) and tie-breaks integer-pinned, so the
     whole ITERATION is cross-engine exact: the DuckDB oracle unrolls
@@ -1038,10 +1040,15 @@ def kmeans_fit(
     cents = _cents_norm(_centroid_vectors(embeddings), dim)
     exploded = None
     for r in range(rounds):
-        assigned = _assign_to_cents(corpus, cents, dim)
-        exploded = _cluster_means(assigned)
+        assigned = _nearest_cell(corpus, cents, dim, "cluster", carry=("v",))
+        exploded = _member_means(assigned, ["cluster"], "v")
         if r < rounds - 1:
-            cents = _reassemble_cents(exploded, dim)
+            cents = _cents_norm(
+                _reassemble_vec(
+                    exploded, [F.col("cluster").alias("label")], "cv"
+                ),
+                dim,
+            )
     out = exploded.orderBy("cluster", "pos")
     return attach_cached_deps(out, corpus)
 

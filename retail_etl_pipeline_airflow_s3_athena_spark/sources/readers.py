@@ -7,7 +7,7 @@ parquet glob + concat per table (S6).  Spark equivalents:
 - S6's glob+concat is just ``spark.read.parquet(dir)`` — partition
   discovery + multi-file union are native, and Hive-style ``date=...``
   directories come back as a partition column with pruning for free.
-  The schema comes from the table's ``_schema.json`` manifest
+  The schema comes from the table's ``.schema.json`` manifest
   (sources/writers) when it has one — the reference's hand-pinned
   columns, recorded by the writer — and from a footer-reading
   inference job only when it has none.

@@ -15,7 +15,7 @@ prune on ``date``.  Gold writes use dynamic partition overwrite
 semantics where partitioned.  No ``coalesce(1)`` anywhere — single-file
 output is a pandas artifact, not a requirement.
 
-Silver and gold tables carry a schema manifest (``_schema.json``,
+Silver and gold tables carry a schema manifest (``.schema.json``,
 functions/fsutil): the plan's schema is known at write time without a
 job, so the writers record it and readers and catalog registrations
 skip the footer-inference job.  A reader never sees a manifest that

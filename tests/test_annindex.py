@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from retail_etl_pipeline_airflow_s3_athena_spark.functions.caching import release_cached
 from retail_etl_pipeline_airflow_s3_athena_spark.operators import annindex, pq
+from tests.conftest import jvm_table
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -83,6 +84,90 @@ def test_out_of_corpus_queries_work(spark, index_path):
     assert set(per_q) == {10**9, 10**9 + 1, 10**9 + 2}
     for ranks in per_q.values():
         assert sorted(ranks) == [1, 2, 3, 4, 5]
+
+
+def test_append_receipt_counts_distinct_ids(spark, tmp_path):
+    """A batch that repeats a vec_id (under a different embedding)
+    returns the DISTINCT id count, and codes/ gains exactly M_SUB rows
+    and one cell per distinct id: the assignment and the cell argmax
+    both group by vec_id, so the repeated rows merge into one code."""
+    path = str(tmp_path / "idx")
+    emb = _emb(spark)
+    annindex.write_ann_index(emb, path)
+    codes_before = spark.read.parquet(f"{path}/codes").count()
+    shift = 1 << 42
+    batch = (
+        emb.filter(F.col("vec_id") < 3)
+        .withColumn("vec_id", F.col("vec_id") + F.lit(shift))
+        .unionByName(
+            emb.filter(F.col("vec_id") == 5).withColumn(
+                "vec_id", F.lit(shift).cast("long")
+            )
+        )
+    )
+    assert batch.count() == 4
+    assert annindex.append_to_ann_index(batch, path) == 3
+    codes = spark.read.schema(annindex.CODES_SCHEMA).parquet(f"{path}/codes")
+    assert codes.count() - codes_before == 3 * pq.M_SUB
+    per_id = {
+        r["vec_id"]: (r["n"], r["cells"])
+        for r in codes.filter(F.col("vec_id") >= shift)
+        .groupBy("vec_id")
+        .agg(
+            F.count("*").alias("n"),
+            F.countDistinct("cell").alias("cells"),
+        )
+        .collect()
+    }
+    assert per_id == {shift + i: (pq.M_SUB, 1) for i in range(3)}
+
+
+def test_cell_tie_breaks_to_lower_label(spark):
+    """A vector whose dround(6) cosine to two centroids is EXACTLY
+    equal (1/sqrt(2) to both unit axes) is assigned to the lower
+    label, and nprobe=1 probes that same lower label, although the
+    higher label's row comes first."""
+    from retail_etl_pipeline_airflow_s3_athena_spark.operators.similarity import (
+        _as_queries,
+        _cents_norm,
+        _nearest_cell,
+        _normed,
+        _probe,
+    )
+
+    dim = 4
+    coarse = _cents_norm(
+        jvm_table(
+            spark,
+            [(7, [0.0, 1.0, 0.0, 0.0]), (3, [1.0, 0.0, 0.0, 0.0]),
+             (5, [0.0, 0.0, 1.0, 0.0])],
+            "label BIGINT, cv ARRAY<DOUBLE>",
+        ),
+        dim,
+    )
+    corpus = _normed(
+        jvm_table(
+            spark,
+            [(0, [1.0, 1.0, 0.0, 0.0]), (1, [0.1, 1.0, 0.0, 0.0])],
+            "vec_id BIGINT, embedding ARRAY<FLOAT>",
+        ),
+        dim,
+    )
+    cells = {
+        r["vec_id"]: r["cell"]
+        for r in _nearest_cell(corpus, coarse, dim).collect()
+    }
+    assert cells == {0: 3, 1: 7}
+    probes = {
+        (r["query_id"], r["cell"])
+        for r in _probe(_as_queries(corpus), coarse, 1, dim).collect()
+    }
+    assert probes == {(0, 3), (1, 7)}
+    probes2 = {
+        (r["query_id"], r["cell"])
+        for r in _probe(_as_queries(corpus), coarse, 2, dim).collect()
+    }
+    assert probes2 == {(0, 3), (0, 7), (1, 7), (1, 3)}
 
 
 def test_compaction_collapses_fragments_and_preserves_answers(spark, tmp_path):
@@ -253,9 +338,7 @@ def test_delete_tombstones_then_compaction_folds(spark, tmp_path):
     release_cached(base)
     n_codes_before = spark.read.parquet(f"{path}/codes").count()
     n = annindex.delete_from_ann_index(
-        spark.createDataFrame(
-            [(int(v),) for v in sorted(victims)], ["vec_id"]
-        ),
+        jvm_table(spark, [(int(v),) for v in sorted(victims)], "vec_id BIGINT"),
         path,
     )
     assert n == len(victims)
@@ -298,7 +381,7 @@ def test_concurrent_delete_during_compaction_survives(spark, tmp_path, monkeypat
     early, late = victims[: len(victims) // 2], victims[len(victims) // 2:]
     assert early and late
     annindex.delete_from_ann_index(
-        spark.createDataFrame([(int(v),) for v in early], ["vec_id"]), path
+        jvm_table(spark, [(int(v),) for v in early], "vec_id BIGINT"), path
     )
 
     orig_snapshot = annindex._tombstone_files
@@ -308,7 +391,7 @@ def test_concurrent_delete_during_compaction_survives(spark, tmp_path, monkeypat
         # a deleter races the compactor: its batch lands AFTER the
         # compactor snapshotted the tombstone table
         annindex.delete_from_ann_index(
-            spark.createDataFrame([(int(v),) for v in late], ["vec_id"]), p
+            jvm_table(spark, [(int(v),) for v in late], "vec_id BIGINT"), p
         )
         return files
 

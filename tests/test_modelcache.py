@@ -113,7 +113,7 @@ def test_pq_train_books_are_local(spark):
     """_train's returned books/means must be driver-local relations
     (no scan, no exchange) — consumers broadcast them freely."""
     emb = readers.read_embeddings(spark, SF_DIR)
-    sub, books, means = pq_ops._train(emb, pq_ops.PQ_ROUNDS)
+    sub, books, means, _ = pq_ops._train(emb, pq_ops.PQ_ROUNDS)
     try:
         for model in (books, means):
             plan = model._jdf.queryExecution().executedPlan().toString()

@@ -47,7 +47,7 @@ def test_gold_layer_s3_round_trip(spark, sf_dir, tmp_path, s3):
     assert all(k.startswith("gold/daily_sales_summary/") for k in keys)
     assert not any(k.endswith("_SUCCESS") or k.endswith(".crc") for k in keys)
     # the schema manifest travels with the data; its checksum does not
-    assert "gold/daily_sales_summary/_schema.json" in keys
+    assert "gold/daily_sales_summary/.schema.json" in keys
     assert object_store.list_layer(s3, BUCKET, "gold/daily_sales_summary") == keys
 
     back = tmp_path / "restored"
@@ -75,7 +75,7 @@ def test_silver_partitions_sync_layout(spark, sf_dir, tmp_path, s3):
         cust, str(tmp_path / "silver"), "customers", run_date="20260814"
     )
     keys = object_store.sync_dir_to_s3(s3, path, BUCKET, "silver/customers")
-    data = [k for k in keys if k != "silver/customers/_schema.json"]
+    data = [k for k in keys if k != "silver/customers/.schema.json"]
     assert data and len(data) == len(keys) - 1
     assert all("date=20260814/" in k for k in data)
 

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from retail_etl_pipeline_airflow_s3_athena_spark.functions.caching import release_cached
 from retail_etl_pipeline_airflow_s3_athena_spark.operators import pq
+from tests.conftest import jvm_table
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -140,13 +141,13 @@ def test_empty_and_single_vector(spark):
     """Degenerate corpora must not crash: empty input trains empty
     books; one vector yields one populated codeword per subspace."""
     schema = "vec_id LONG, embedding ARRAY<FLOAT>, label INT"
-    empty = spark.createDataFrame([], schema)
+    empty = jvm_table(spark, [], schema)
     df = pq.pq_codebooks(empty)
     assert df.count() == 0
     release_cached(df)
 
-    one = spark.createDataFrame(
-        [(0, [float(i) / 64.0 for i in range(64)], 3)], schema
+    one = jvm_table(
+        spark, [(0, [float(i) / 64.0 for i in range(64)], 3)], schema
     )
     df = pq.pq_codes(one)
     rows = df.collect()

@@ -8,11 +8,10 @@ import pytest
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from retail_etl_pipeline_airflow_s3_athena_spark.functions import quality
 from retail_etl_pipeline_airflow_s3_athena_spark.functions.jobs import observed_count
-from tests.conftest import jobs_submitted
+from tests.conftest import jobs_submitted, jvm_table
 
 GOLD_SCHEMAS = {
     "daily_sales_summary": "order_date date, revenue double, total_orders long, total_items long",
@@ -21,19 +20,6 @@ GOLD_SCHEMAS = {
     "store_performance": "store_id long, total_revenue double, total_transactions long",
 }
 SILVER_SCHEMA = "order_id long, customer_id long, product_id long, amount double, note string"
-
-
-def _table(spark, rows, schema: str) -> DataFrame:
-    """``rows`` as a one-partition table planned in the JVM alone
-    (createDataFrame of a Python list runs a Python task per partition,
-    which made each case here cost seconds)."""
-    st = T.StructType.fromDDL(schema)
-    structs = [
-        F.struct(*[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(r, st.fields)])
-        for r in rows or [[None] * len(st.fields)]
-    ]
-    df = spark.range(1, numPartitions=1).select(F.inline(F.array(*structs)))
-    return df if rows else df.limit(0)
 
 
 def _golds(spark, **overrides) -> dict[str, DataFrame]:
@@ -50,7 +36,7 @@ def _golds(spark, **overrides) -> dict[str, DataFrame]:
     }
     rows.update(overrides)
     return {
-        name: _table(spark, rows[name], GOLD_SCHEMAS[name]) for name in GOLD_SCHEMAS
+        name: jvm_table(spark, rows[name], GOLD_SCHEMAS[name]) for name in GOLD_SCHEMAS
     }
 
 
@@ -112,7 +98,7 @@ def test_quality_rollup_job_budget(spark, tmp_path):
     silver = _as_parquet(
         spark,
         tmp_path / "silver",
-        {"sale_transactions": _table(spark, [(1, 2, 3, 4.0, "x")] * 3, SILVER_SCHEMA)},
+        {"sale_transactions": jvm_table(spark, [(1, 2, 3, 4.0, "x")] * 3, SILVER_SCHEMA)},
     )
     quality.run_data_quality_checks(golds)  # warm: first-use planning
     n_gold = jobs_submitted(spark, lambda: quality.run_data_quality_checks(golds))
@@ -169,7 +155,7 @@ def test_silver_duplicates_with_nulls_match_drop_duplicates(spark):
         (None, None, 3, float("nan"), "x"),
         (5, None, 6, 1.0, "y"),
     ]
-    silver = {"sale_transactions": _table(spark, rows, SILVER_SCHEMA)}
+    silver = {"sale_transactions": jvm_table(spark, rows, SILVER_SCHEMA)}
     golds = _golds(spark)
     got = quality.run_data_quality_checks(golds, silver_tables=silver)
     assert got == _parent_report(golds, silver)
